@@ -280,41 +280,26 @@ def _add_cell_eps(tr, scale: float):
     """Add ``(gy*FG + gx) * scale`` to every cell — the deterministic
     per-cell epsilon shared bit-for-bit with the DuckDB oracles (both
     sides run the identical IEEE-double expression)."""
-    from richdem_spark.tiles import TILE_HALO_SCHEMA, TiledRaster, pack, \
+    from richdem_spark.tiles import TILE_SCHEMA, TiledRaster, tile_frame, \
         unpack
 
     tw, th = tr.meta.tile_w, tr.meta.tile_h
 
     def addeps(it):
         import numpy as np
-        import pandas as pd
 
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width",
-                                    "height", "dtype", "nodata", "data",
-                                    "hs_n", "hs_s", "hs_w", "hs_e")}
+            rows = []
             for r in pdf.itertuples():
-                a = unpack(r.data, r.height, r.width, r.dtype).copy()
+                a = unpack(r.data, r.height, r.width, r.dtype)
                 yy, xx = np.mgrid[0:r.height, 0:r.width]
                 gxs = xx + r.tile_x * tw
                 gys = yy + r.tile_y * th
-                a = a + (gys * FG + gxs) * scale
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(r.width)
-                rows["height"].append(r.height)
-                rows["dtype"].append("float64")
-                rows["nodata"].append(None)
-                rows["data"].append(pack(a))
-                # border strips ride along -> downstream halo_join stays
-                # JVM-only (tiles.HALO_STRIP_COLS); values unchanged
-                rows["hs_n"].append(pack(a[0, :]))
-                rows["hs_s"].append(pack(a[-1, :]))
-                rows["hs_w"].append(pack(np.ascontiguousarray(a[:, 0])))
-                rows["hs_e"].append(pack(np.ascontiguousarray(a[:, -1])))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y,
+                             a + (gys * FG + gxs) * scale, None))
+            yield tile_frame(rows)
 
-    return TiledRaster(tr.df.mapInPandas(addeps, TILE_HALO_SCHEMA), tr.meta)
+    return TiledRaster(tr.df.mapInPandas(addeps, TILE_SCHEMA), tr.meta)
 
 
 def _fill_grid(spark, sf_dir):

@@ -701,7 +701,7 @@ def FlipHorz(tr: TiledRaster) -> TiledRaster:
 
 def _rekey_flip(tr: TiledRaster, vert: bool) -> TiledRaster:
     import pandas as pd
-    from .tiles import TILE_SCHEMA, RasterMeta, pack, unpack
+    from .tiles import TILE_SCHEMA, pack, tile_frame, unpack
 
     m = tr.meta
     nty, ntx = m.ntiles_y, m.ntiles_x
@@ -756,21 +756,14 @@ def _rekey_flip(tr: TiledRaster, vert: bool) -> TiledRaster:
         import numpy as np
 
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
+            rows = []
             for r in pdf.itertuples():
                 a = unpack(r.data, r.height, r.width, r.dtype)
                 a = np.flipud(a) if vert else np.fliplr(a)
-                rows["tile_x"].append(
-                    r.tile_x if vert else ntx - 1 - r.tile_x)
-                rows["tile_y"].append(
-                    nty - 1 - r.tile_y if vert else r.tile_y)
-                rows["width"].append(r.width)
-                rows["height"].append(r.height)
-                rows["dtype"].append(r.dtype)
-                rows["nodata"].append(r.nodata)
-                rows["data"].append(pack(a))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x if vert else ntx - 1 - r.tile_x,
+                             nty - 1 - r.tile_y if vert else r.tile_y,
+                             a, r.nodata))
+            yield tile_frame(rows)
 
     out_df = tr.df.mapInPandas(run, TILE_SCHEMA)
     nm = m.with_history("flipVert" if vert else "flipHorz")
@@ -781,26 +774,17 @@ def Transpose(tr: TiledRaster) -> TiledRaster:
     """Array2D::transpose (Array2D.hpp:726-747): the transposed tile grid
     is the tile grid transposed — a pure per-tile ``.T`` + key swap, zero
     shuffles beyond the key change, fully distributed."""
-    import numpy as np
-    import pandas as pd
-    from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+    from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, tile_frame, \
+        unpack
 
     m = tr.meta
 
     def run(it):
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
-            for r in pdf.itertuples():
-                a = unpack(r.data, r.height, r.width, r.dtype)
-                rows["tile_x"].append(r.tile_y)
-                rows["tile_y"].append(r.tile_x)
-                rows["width"].append(r.height)
-                rows["height"].append(r.width)
-                rows["dtype"].append(r.dtype)
-                rows["nodata"].append(r.nodata)
-                rows["data"].append(pack(np.ascontiguousarray(a.T)))
-            yield pd.DataFrame(rows)
+            yield tile_frame(
+                (r.tile_y, r.tile_x,
+                 unpack(r.data, r.height, r.width, r.dtype).T, r.nodata)
+                for r in pdf.itertuples())
 
     new_meta = RasterMeta(
         width=m.height, height=m.width, tile_w=m.tile_h, tile_h=m.tile_w,
@@ -818,9 +802,9 @@ def Expand(tr: TiledRaster, new_w: int, new_h: int,
     executors (spark.range anti-joined against existing keys) — the
     driver never sees a data blob."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
-    from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+    from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, tile_frame, \
+        unpack
 
     m = tr.meta
     if new_w < m.width or new_h < m.height:
@@ -831,8 +815,7 @@ def Expand(tr: TiledRaster, new_w: int, new_h: int,
 
     def pad(it):
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
+            rows = []
             for r in pdf.itertuples():
                 a = unpack(r.data, r.height, r.width, r.dtype)
                 tw_t = min(tw, new_w - r.tile_x * tw)
@@ -841,14 +824,8 @@ def Expand(tr: TiledRaster, new_w: int, new_h: int,
                     out = np.full((th_t, tw_t), val, dtype=a.dtype)
                     out[: r.height, : r.width] = a
                     a = out
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(tw_t)
-                rows["height"].append(th_t)
-                rows["dtype"].append(r.dtype)
-                rows["nodata"].append(r.nodata)
-                rows["data"].append(pack(a))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y, a, r.nodata))
+            yield tile_frame(rows)
 
     padded = tr.df.mapInPandas(pad, TILE_SCHEMA)
 
@@ -864,20 +841,13 @@ def Expand(tr: TiledRaster, new_w: int, new_h: int,
 
     def gen(it):
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
-            for r in pdf.itertuples():
-                tw_t = min(tw, new_w - r.tile_x * tw)
-                th_t = min(th, new_h - r.tile_y * th)
-                a = np.full((th_t, tw_t), val, dtype=np.dtype(dt))
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(tw_t)
-                rows["height"].append(th_t)
-                rows["dtype"].append(dt)
-                rows["nodata"].append(m.nodata)
-                rows["data"].append(pack(a))
-            yield pd.DataFrame(rows)
+            yield tile_frame(
+                (r.tile_x, r.tile_y,
+                 np.full((min(th, new_h - r.tile_y * th),
+                          min(tw, new_w - r.tile_x * tw)),
+                         val, dtype=np.dtype(dt)),
+                 m.nodata)
+                for r in pdf.itertuples())
 
     out_df = padded.unionByName(missing.mapInPandas(gen, TILE_SCHEMA))
     new_meta = RasterMeta(
@@ -891,18 +861,15 @@ def Expand(tr: TiledRaster, new_w: int, new_h: int,
 def SetEdges(tr: TiledRaster, val: float) -> TiledRaster:
     """Array2D::setEdges (Array2D.hpp:1039-1065): set the global raster
     border; needs only the per-tile edge bitmask (zero shuffles)."""
-    import numpy as np
     from .ops.focal import elementwise  # noqa: F401 (pattern reference)
-    import pandas as pd
-    from .tiles import TILE_SCHEMA, pack, unpack
+    from .tiles import TILE_SCHEMA, tile_frame, unpack
 
     m = tr.meta
     ntx, nty = m.ntiles_x, m.ntiles_y
 
     def run(it):
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
+            rows = []
             for r in pdf.itertuples():
                 a = unpack(r.data, r.height, r.width, r.dtype).copy()
                 if r.tile_y == 0:
@@ -913,14 +880,8 @@ def SetEdges(tr: TiledRaster, val: float) -> TiledRaster:
                     a[:, 0] = val
                 if r.tile_x == ntx - 1:
                     a[:, -1] = val
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(r.width)
-                rows["height"].append(r.height)
-                rows["dtype"].append(r.dtype)
-                rows["nodata"].append(r.nodata)
-                rows["data"].append(pack(a))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y, a, r.nodata))
+            yield tile_frame(rows)
 
     return TiledRaster(tr.df.mapInPandas(run, TILE_SCHEMA),
                        m.with_history(f"setEdges({val})"))

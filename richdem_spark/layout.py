@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack
+from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, tile_frame
 
 _PATH_SCHEMA = StructType(
     [
@@ -138,7 +138,7 @@ def read_layout(spark: SparkSession, layout_path: str,
 
     def fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {f.name: [] for f in TILE_SCHEMA.fields}
+            rows = []
             for r in pdf.itertuples():
                 if r.path is None:
                     a = np.full((th, tw), fill, np.dtype(dtype))
@@ -150,15 +150,8 @@ def read_layout(spark: SparkSession, layout_path: str,
                             f"expected {(th, tw)} — all layout tiles "
                             "must share one shape (Layoutfile.hpp)")
                     a = a.astype(np.dtype(dtype), copy=False)
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(tw)
-                out["height"].append(th)
-                out["dtype"].append(dtype)
-                out["nodata"].append(
-                    float(nd) if nd is not None else None)
-                out["data"].append(pack(a))
-            yield pd.DataFrame(out)
+                rows.append((r.tile_x, r.tile_y, a, nd))
+            yield tile_frame(rows)
 
     return TiledRaster(paths.mapInPandas(fetch, TILE_SCHEMA), meta)
 

@@ -37,7 +37,8 @@ from pyspark.sql.types import (
 
 from ..constants import D8X, D8Y, FLOWDIR_NO_DATA
 from ..kernels.d8 import d8_flow_accum, exit_cell_of
-from ..tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+from ..tiles import (
+    TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
 
 # graphs at most this big are solved on the driver; larger ones run
 # as a single-partition executor job (tests patch this down) — see
@@ -501,9 +502,7 @@ def _finish_accumulation(r1, meta: RasterMeta, spark) -> TiledRaster:
 
     def round2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "width", "height",
-                "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 acc = unpack(r.accum, r.height, r.width, "float64").copy()
                 if off_map is not None:
@@ -521,14 +520,8 @@ def _finish_accumulation(r1, meta: RasterMeta, spark) -> TiledRaster:
                     acc = acc + add
                     acc[unpack(r.accum, r.height, r.width,
                                "float64") < 0] = -1.0
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("float64")
-                out["nodata"].append(-1.0)
-                out["data"].append(pack(acc))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, acc, -1.0))
+            yield tile_frame(out)
 
     out_df = joined.mapInPandas(round2, TILE_SCHEMA)
     new_meta = RasterMeta(

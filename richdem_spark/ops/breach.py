@@ -69,6 +69,7 @@ API).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
@@ -90,6 +91,8 @@ from ..tiles import (
     assemble_padded,
     halo_join,
     pack,
+    tile_frame,
+    tiles_from_state,
     unpack,
 )
 
@@ -552,13 +555,8 @@ def breach_depressions_tiled(
     ).localCheckpoint(eager=True)
 
     raised_tr = TiledRaster(
-        state.select(
-            "tile_x", "tile_y", "width", "height",
-            F.lit("float64").alias("dtype"),
-            F.lit(meta.nodata).cast("double").alias("nodata"),
-            F.col("raised").alias("data"),
-        ),
-        meta,
+        tiles_from_state(state, "raised", "float64", meta.nodata),
+        replace(meta, dtype="float64"),
     )
 
     # ---- phase B+C: the canonical drainage tree ---------------------
@@ -681,8 +679,7 @@ def breach_depressions_tiled(
 
     def apply_updates(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
+            rows = []
             for r in pdf.itertuples():
                 h, w = r.height, r.width
                 a = unpack(r.raised, h, w, "float64").copy()
@@ -691,14 +688,8 @@ def breach_depressions_tiled(
                         lx = int(u["gx"]) - r.tile_x * tw
                         ly = int(u["gy"]) - r.tile_y * th
                         a[ly, lx] = min(a[ly, lx], float(u["val"]))
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["dtype"].append("float64")
-                rows["nodata"].append(nodata)
-                rows["data"].append(pack(a))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y, a, nodata))
+            yield tile_frame(rows)
 
     out = TiledRaster(
         carved.mapInPandas(apply_updates, TILE_SCHEMA),
@@ -903,8 +894,7 @@ def _tree_fill_pass(carved: TiledRaster, walk_state, meta,
     def wave2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vu = bc.value
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 h, w = r.height, r.width
                 C = np.frombuffer(r.vals, np.int64).copy()
@@ -915,14 +905,8 @@ def _tree_fill_pass(carved: TiledRaster, walk_state, meta,
                     up = np.array([vu[int(g)] for g in exq[m].tolist()],
                                   dtype=np.int64)
                     C[m] = np.maximum(C[m], up + D[m])
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dtype"].append("float64")
-                out["nodata"].append(nodata)
-                out["data"].append(pack(_i2f(C).reshape(h, w)))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, _i2f(C).reshape(h, w), nodata))
+            yield tile_frame(out)
 
     res = TiledRaster(
         st.mapInPandas(wave2, TILE_SCHEMA),

@@ -74,6 +74,8 @@ from ..tiles import (
     assemble_padded,
     halo_join,
     pack,
+    tile_frame,
+    tiles_from_state,
     unpack,
 )
 
@@ -915,8 +917,7 @@ def depression_hierarchy(
     def wave_d_labels(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         klk, klv, _cd, _cp = bc.value
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
+            rows = []
             for r in pdf.itertuples():
                 h, w = r.height, r.width
                 labg = unpack(r.labg, h, w, "int64").ravel()
@@ -925,14 +926,8 @@ def depression_hierarchy(
                 if m.any():
                     pos = np.searchsorted(klk, labg[m])
                     lab[m] = klv[np.clip(pos, 0, len(klk) - 1)]
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["dtype"].append("int64")
-                rows["nodata"].append(0.0)
-                rows["data"].append(pack(lab.reshape(h, w)))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y, lab.reshape(h, w), 0.0))
+            yield tile_frame(rows)
 
     lab_b = b_df.join(
         a_df.select("tile_x", "tile_y", "data"), ["tile_x", "tile_y"]
@@ -990,12 +985,7 @@ def depression_hierarchy(
         geotransform=meta.geotransform, projection=meta.projection,
         history=meta.history,
     ).with_history("depression_hierarchy_labels")
-    flow_df = a_df.select(
-        "tile_x", "tile_y", "width", "height",
-        F.lit("uint8").alias("dtype"),
-        F.lit(None).cast("double").alias("nodata"),
-        F.col("flowdirs").alias("data"),
-    )
+    flow_df = tiles_from_state(a_df, "flowdirs", "uint8", None)
     flow_meta = RasterMeta(
         width=meta.width, height=meta.height, tile_w=meta.tile_w,
         tile_h=meta.tile_h, nodata=None, dtype="uint8",

@@ -24,6 +24,7 @@ Execution plan (exactly the paper's O(perimeter) communication bound):
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
@@ -42,7 +43,8 @@ from pyspark.sql.types import (
 
 from ..constants import TOPO_D8
 from ..kernels.fill import fill_tile_labels, graph_priority_flood
-from ..tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+from ..tiles import (
+    TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
 
 _R1_SCHEMA = StructType(
     [
@@ -519,25 +521,18 @@ def fill_depressions(
     # some of its labels' water level exceeds the tile's minimum filled
     # elevation; ocean/unaffected tiles are forwarded JVM-side untouched
     passthrough = None
-    # JVM-side halo strips for the output: round 1 already packed the
-    # filled border rows/columns (elv_*), so the filled raster carries
-    # them as HALO_STRIP_COLS and downstream focal ops (flow dirs/accum,
-    # terrain attributes) skip the Python strip-emission pass entirely
-    # (tiles.halo_join JVM path)
-    strip_alias = [
+    # round 1 packed the filled grid as float64, with its border strips
+    # in elv_*: projected onto the tile columns, that is the output
+    tile_cols = [
+        "tile_x", "tile_y", "width", "height", "dtype", "nodata", "data",
         F.col("elv_n").alias("hs_n"), F.col("elv_s").alias("hs_s"),
         F.col("elv_w").alias("hs_w"), F.col("elv_e").alias("hs_e"),
     ]
+    new_meta = replace(meta, dtype="float64").with_history(
+        f"fill_depressions(topology={topology}, epsilon={epsilon})")
     if not epsilon:
-        tile_cols = ["tile_x", "tile_y", "width", "height", "dtype",
-                     "nodata", "data"]
         if lvl_df is None and lvl_map is None:
-            return TiledRaster(
-                r1.select(*tile_cols, *strip_alias),
-                meta.with_history(
-                    f"fill_depressions(topology={topology}, "
-                    f"epsilon={epsilon})"),
-            )
+            return TiledRaster(r1.select(*tile_cols), new_meta)
         # pass-through fast path selection stays JVM-side: a tile needs
         # the Python raise pass only if some label's water level exceeds
         # the tile's minimum filled elevation
@@ -546,7 +541,7 @@ def fill_depressions(
             # broadcast-exchange jobs
             lst = [int(t) for t in need_tids]
             passthrough = r1k.where(~F.col("tid").isin(lst)) \
-                .select(*tile_cols, *strip_alias)
+                .select(*tile_cols)
             r1k = r1k.where(F.col("tid").isin(lst))
         else:
             if need_tids is not None:
@@ -563,7 +558,7 @@ def fill_depressions(
                 )
             passthrough = r1k.join(
                 F.broadcast(need_df), "tid",
-                "left_anti").select(*tile_cols, *strip_alias)
+                "left_anti").select(*tile_cols)
             r1k = r1k.join(F.broadcast(need_df), "tid", "left_semi")
 
     if lvl_map is not None:
@@ -575,16 +570,11 @@ def fill_depressions(
 
     eps = bool(epsilon)
 
-    from ..tiles import TILE_HALO_SCHEMA
-
     def round2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels.fill import priority_flood_fill
 
         for pdf in it:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "width", "height",
-                "dtype", "nodata", "data",
-                "hs_n", "hs_s", "hs_w", "hs_e")}
+            out = []
             for r in pdf.itertuples():
                 filled = unpack(
                     r.data, r.height, r.width, "float64"
@@ -613,30 +603,10 @@ def fill_depressions(
                     filled = priority_flood_fill(
                         filled, r.nodata, topology, epsilon=True
                     )
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("float64")
-                out["nodata"].append(r.nodata)
-                out["data"].append(pack(filled))
-                out["hs_n"].append(pack(filled[0, :]))
-                out["hs_s"].append(pack(filled[-1, :]))
-                out["hs_w"].append(pack(np.ascontiguousarray(
-                    filled[:, 0])))
-                out["hs_e"].append(pack(np.ascontiguousarray(
-                    filled[:, -1])))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, filled, r.nodata))
+            yield tile_frame(out)
 
-    out_df = joined.mapInPandas(round2, TILE_HALO_SCHEMA)
+    out_df = joined.mapInPandas(round2, TILE_SCHEMA)
     if passthrough is not None:
         out_df = out_df.unionByName(passthrough)
-    new_meta = RasterMeta(
-        width=meta.width, height=meta.height, tile_w=meta.tile_w,
-        tile_h=meta.tile_h, nodata=meta.nodata, dtype="float64",
-        geotransform=meta.geotransform, projection=meta.projection,
-        history=meta.history,
-    ).with_history(
-        f"fill_depressions(topology={topology}, epsilon={epsilon})"
-    )
     return TiledRaster(out_df, new_meta)

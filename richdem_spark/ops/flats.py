@@ -42,13 +42,13 @@ from pyspark.sql.types import (
 from ..constants import D8X, D8Y, FLOWDIR_NO_DATA, NO_FLOW, TOPO_D8
 from ..kernels.ccl import label_components
 from ..tiles import (
-    TILE_HALO_SCHEMA,
     TILE_SCHEMA,
     RasterMeta,
     TiledRaster,
     assemble_padded,
     halo_join,
     pack,
+    tile_frame,
     unpack,
 )
 
@@ -192,12 +192,9 @@ def _local_bfs(dist: np.ndarray, allowed: np.ndarray,
 
 
 def _labels_raster(st, meta: RasterMeta) -> TiledRaster:
-    # the state frame already packs the label border strips — alias
-    # them as HALO_STRIP_COLS so halo_join assembles the label halo in
-    # the JVM (no Python pass over the label blobs).  The meta MUST
-    # carry the LABEL dtype (int64), not the DEM's: halo_join's JVM
-    # corner extraction slices by meta dtype itemsize, and a float32
-    # DEM meta would cut 4-byte corners out of 8-byte label strips.
+    # the state frame already packs the label border strips (lab_*);
+    # projected onto the tile columns they are the label raster's
+    # strips.  The meta carries the LABEL dtype (int64), not the DEM's.
     from dataclasses import replace as _replace
 
     return TiledRaster(
@@ -669,9 +666,7 @@ def resolve_flats_distributed(
 
     def combine(it):
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data",
-                                   "hs_n", "hs_s", "hs_w", "hs_e")}
+            out = []
             for r in pdf.itertuples():
                 labels = unpack(r.labels, r.height, r.width, "int64")
                 aw = unpack(r.away, r.height, r.width, "int64")
@@ -694,21 +689,10 @@ def resolve_flats_distributed(
                     np.where(awv > 0, fhv - awv + 2 * twv, 2 * twv),
                     awv,
                 )
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("int64")
-                out["nodata"].append(-1.0)
-                m64 = mask.astype(np.int64)
-                out["data"].append(pack(m64))
-                out["hs_n"].append(pack(m64[0, :]))
-                out["hs_s"].append(pack(m64[-1, :]))
-                out["hs_w"].append(pack(np.ascontiguousarray(m64[:, 0])))
-                out["hs_e"].append(pack(np.ascontiguousarray(m64[:, -1])))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, mask.astype(np.int64), -1.0))
+            yield tile_frame(out)
 
-    mask_df = mask_join.mapInPandas(combine, TILE_HALO_SCHEMA)
+    mask_df = mask_join.mapInPandas(combine, TILE_SCHEMA)
     mask_tr = TiledRaster(
         mask_df,
         RasterMeta(
@@ -718,14 +702,7 @@ def resolve_flats_distributed(
         ).with_history("resolve_flats_distributed(mask)"),
     )
     lab_tr = TiledRaster(
-        st2.select(
-            "tile_x", "tile_y", "width", "height",
-            F.lit("int64").alias("dtype"),
-            F.lit(None).cast("double").alias("nodata"),
-            F.col("labels").alias("data"),
-            F.col("lab_n").alias("hs_n"), F.col("lab_s").alias("hs_s"),
-            F.col("lab_w").alias("hs_w"), F.col("lab_e").alias("hs_e"),
-        ),
+        _labels_raster(st2, meta).df,
         RasterMeta(
             width=meta.width, height=meta.height, tile_w=meta.tile_w,
             tile_h=meta.tile_h, nodata=None, dtype="int64",
@@ -758,8 +735,7 @@ def flow_dirs_through_flats(
         from ..kernels.flats import d8_flow_flats
 
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 d = unpack(r.data, r.height, r.width, r.dtype)
                 mk = unpack(r.mdata, r.height, r.width, "int64")
@@ -777,14 +753,8 @@ def flow_dirs_through_flats(
                 core = res[pt : pt + r.height, pl : pl + r.width]
                 # only NO_FLOW core cells change; keep original elsewhere
                 final = np.where((d == NO_FLOW), core, d).astype(np.uint8)
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("uint8")
-                out["nodata"].append(float(FLOWDIR_NO_DATA))
-                out["data"].append(pack(final))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, final, float(FLOWDIR_NO_DATA)))
+            yield tile_frame(out)
 
     out_df = joined.mapInPandas(run, TILE_SCHEMA)
     return TiledRaster(
@@ -809,8 +779,7 @@ def alter_dem_distributed(
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 e = unpack(r.data, r.height, r.width,
                            r.dtype).astype(np.float64).copy()
@@ -833,14 +802,8 @@ def alter_dem_distributed(
                     from ..kernels.flats import nextafter_k
 
                     e[sel] = nextafter_k(e[sel], todo[sel])
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("float64")
-                out["nodata"].append(r.nodata)
-                out["data"].append(pack(e))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, e, r.nodata))
+            yield tile_frame(out)
 
     out_df = joined.mapInPandas(run, TILE_SCHEMA)
     return TiledRaster(
@@ -869,8 +832,7 @@ def dinf_flow_flats_distributed(
         from ..kernels.flowmet import DINF_NO_FLOW, dinf_flow_flats
 
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 a = unpack(r.data, r.height, r.width, "float64")
                 mk = unpack(r.mdata, r.height, r.width, "int64")
@@ -889,14 +851,8 @@ def dinf_flow_flats_distributed(
                 pa[pt : pt + r.height, pl : pl + r.width] = a
                 res = dinf_flow_flats(pm, plb, pa)
                 core = res[pt : pt + r.height, pl : pl + r.width]
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("float64")
-                out["nodata"].append(-1.0)
-                out["data"].append(pack(core))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, core, -1.0))
+            yield tile_frame(out)
 
     out_df = joined.mapInPandas(run, TILE_SCHEMA)
     return TiledRaster(

@@ -17,25 +17,14 @@ import numpy as np
 import pandas as pd
 
 from ..tiles import (
-    TILE_HALO_SCHEMA,
     TILE_SCHEMA,
     RasterMeta,
     TiledRaster,
     assemble_padded,
     halo_join,
-    pack,
+    tile_frame,
     unpack,
 )
-
-
-def _emit_strips(rows: dict, arr: np.ndarray) -> None:
-    """Append the four border strips of ``arr`` to an output-row dict —
-    producers carry them so downstream halo_join stays JVM-only
-    (tiles.HALO_STRIP_COLS)."""
-    rows["hs_n"].append(pack(arr[0, :]))
-    rows["hs_s"].append(pack(arr[-1, :]))
-    rows["hs_w"].append(pack(np.ascontiguousarray(arr[:, 0])))
-    rows["hs_e"].append(pack(np.ascontiguousarray(arr[:, -1])))
 
 
 def apply_focal(
@@ -64,10 +53,7 @@ def apply_focal(
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = {k: [] for k in
-                    ("tile_x", "tile_y", "width", "height",
-                     "dtype", "nodata", "data",
-                     "hs_n", "hs_s", "hs_w", "hs_e")}
+            rows = []
             for r in pdf.itertuples():
                 core = unpack(r.data, r.height, r.width, r.dtype)
                 strips = (
@@ -98,18 +84,12 @@ def apply_focal(
                         _time.perf_counter() - t0,
                     )
                 core_out = out[pt : pt + r.height, pl : pl + r.width]
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(r.width)
-                rows["height"].append(r.height)
-                rows["dtype"].append(out_dtype)
-                rows["nodata"].append(out_nodata)
-                packed_out = core_out.astype(np.dtype(out_dtype))
-                rows["data"].append(pack(packed_out))
-                _emit_strips(rows, packed_out)
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y,
+                             core_out.astype(np.dtype(out_dtype)),
+                             out_nodata))
+            yield tile_frame(rows)
 
-    out_df = halo_join(tr).mapInPandas(run, TILE_HALO_SCHEMA)
+    out_df = halo_join(tr).mapInPandas(run, TILE_SCHEMA)
     new_meta = RasterMeta(
         width=meta.width, height=meta.height,
         tile_w=meta.tile_w, tile_h=meta.tile_h,
@@ -135,24 +115,13 @@ def elementwise(
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = {k: [] for k in
-                    ("tile_x", "tile_y", "width", "height",
-                     "dtype", "nodata", "data",
-                     "hs_n", "hs_s", "hs_w", "hs_e")}
-            for r in pdf.itertuples():
-                a = unpack(r.data, r.height, r.width, r.dtype)
-                out = fn(a).astype(np.dtype(odt))
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(r.width)
-                rows["height"].append(r.height)
-                rows["dtype"].append(odt)
-                rows["nodata"].append(ond)
-                rows["data"].append(pack(out))
-                _emit_strips(rows, out)
-            yield pd.DataFrame(rows)
+            yield tile_frame(
+                (r.tile_x, r.tile_y,
+                 fn(unpack(r.data, r.height, r.width, r.dtype))
+                 .astype(np.dtype(odt)), ond)
+                for r in pdf.itertuples())
 
-    out_df = tr.df.mapInPandas(run, TILE_HALO_SCHEMA)
+    out_df = tr.df.mapInPandas(run, TILE_SCHEMA)
     m = tr.meta
     new_meta = RasterMeta(
         width=m.width, height=m.height, tile_w=m.tile_w, tile_h=m.tile_h,
@@ -185,25 +154,14 @@ def combine_tiles(
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = {k: [] for k in
-                    ("tile_x", "tile_y", "width", "height",
-                     "dtype", "nodata", "data",
-                     "hs_n", "hs_s", "hs_w", "hs_e")}
-            for r in pdf.itertuples():
-                va = unpack(r.data, r.height, r.width, r.dtype)
-                vb = unpack(r.data_b, r.height, r.width, r.dtype_b)
-                out = fn(va, vb).astype(np.dtype(out_dtype))
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(r.width)
-                rows["height"].append(r.height)
-                rows["dtype"].append(out_dtype)
-                rows["nodata"].append(out_nodata)
-                rows["data"].append(pack(out))
-                _emit_strips(rows, out)
-            yield pd.DataFrame(rows)
+            yield tile_frame(
+                (r.tile_x, r.tile_y,
+                 fn(unpack(r.data, r.height, r.width, r.dtype),
+                    unpack(r.data_b, r.height, r.width, r.dtype_b))
+                 .astype(np.dtype(out_dtype)), out_nodata)
+                for r in pdf.itertuples())
 
-    out_df = joined.mapInPandas(run, TILE_HALO_SCHEMA)
+    out_df = joined.mapInPandas(run, TILE_SCHEMA)
     m = a.meta
     new_meta = RasterMeta(
         width=m.width, height=m.height, tile_w=m.tile_w, tile_h=m.tile_h,

@@ -39,7 +39,7 @@ from pyspark.sql.types import (
 from ..constants import NO_FLOW, TOPO_D8
 from ..kernels.dephier import NO_VALUE
 from ..kernels.fsm import overflow
-from ..tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+from ..tiles import TILE_SCHEMA, RasterMeta, TiledRaster, tile_frame, unpack
 from .accum import flow_accumulation_d8
 from .dephier import (
     build_outlet_chains,
@@ -441,8 +441,7 @@ def fill_spill_merge(
         cdv, cpv, fov = bc.value
         klk, klv = bc4.value
         for pdf in it:
-            rows = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                    "dtype", "nodata", "data")}
+            rows = []
             for r in pdf.itertuples():
                 h, w = r.height, r.width
                 lab = unpack(r.labdata, h, w, "int64").ravel()
@@ -457,14 +456,8 @@ def fill_spill_merge(
                     hit = klk[posc] == fn[m]
                     L = np.where(hit, klv[posc], -np.inf)
                     out[m] = np.maximum(L - elev[m], 0.0)
-                rows["tile_x"].append(r.tile_x)
-                rows["tile_y"].append(r.tile_y)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["dtype"].append("float64")
-                rows["nodata"].append(None)
-                rows["data"].append(pack(out.reshape(h, w)))
-            yield pd.DataFrame(rows)
+                rows.append((r.tile_x, r.tile_y, out.reshape(h, w), None))
+            yield tile_frame(rows)
 
     out_df = cells.mapInPandas(pass4, TILE_SCHEMA)
     new_meta = RasterMeta(

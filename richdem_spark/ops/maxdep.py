@@ -65,6 +65,7 @@ from ..tiles import (
     assemble_padded,
     halo_join,
     pack,
+    tile_frame,
     unpack,
 )
 
@@ -258,8 +259,7 @@ def fill_depressions_max_dep(
 
     def wave2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 h, w = r.height, r.width
                 a = unpack(r.dem, h, w, "float64").copy()
@@ -275,14 +275,8 @@ def fill_depressions_max_dep(
                     mm[m] = hit
                     fil = unpack(r.fil, h, w, "float64")
                     a[mm] = fil[mm]
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dtype"].append("float64")
-                out["nodata"].append(nodata)
-                out["data"].append(pack(a))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, a, nodata))
+            yield tile_frame(out)
 
     out_df = st.join(sel_df, ["tile_x", "tile_y"], "left") \
         .mapInPandas(wave2, TILE_SCHEMA)

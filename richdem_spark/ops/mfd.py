@@ -50,6 +50,7 @@ from ..tiles import (
     assemble_padded,
     halo_join,
     pack,
+    tiles_from_state,
     unpack,
 )
 
@@ -111,7 +112,7 @@ HALO_K = 8
 
 def _emit_props_strips(meta: RasterMeta):
     """Depth-HALO_K border strips of the (h, w, 9) proportions tensor,
-    keyed by the RECEIVING tile (tiles._emit_halo_strips slot mapping
+    keyed by the RECEIVING tile (the tiles.halo_join slot mapping
     applied to the 3-D tensor, k rows/cols deep)."""
     ntx, nty = meta.ntiles_x, meta.ntiles_y
     k = HALO_K
@@ -448,12 +449,7 @@ def flow_accumulation_mfd(
         metrics["rounds"] = rounds_done
         metrics["inflight_per_round"] = inflight
 
-    out_df = state.select(
-        "tile_x", "tile_y", "width", "height",
-        F.lit("float64").alias("dtype"),
-        F.lit(-1.0).alias("nodata"),
-        F.col("accum").alias("data"),
-    )
+    out_df = tiles_from_state(state, "accum", "float64", -1.0)
     new_meta = RasterMeta(
         width=meta.width, height=meta.height, tile_w=meta.tile_w,
         tile_h=meta.tile_h, nodata=-1.0, dtype="float64",

@@ -33,7 +33,8 @@ from ..constants import D8X, D8Y, TOPO_D8
 from ..kernels.ccl import label_components
 from ..kernels.d8 import exit_cell_of
 from ..kernels.misc import _bresenham
-from ..tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+from ..tiles import (
+    TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
 
 def seam_union_find(rows, topology):
     """Union-find over per-tile border component strips.  ``rows`` carry
@@ -198,8 +199,7 @@ def bucket_fill_from_edges(
 
     def wave2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 dtype = r.dt.decode()
                 a = unpack(r.data, r.height, r.width, dtype).copy()
@@ -214,17 +214,11 @@ def bucket_fill_from_edges(
                     mm = np.zeros_like(m)
                     mm[m] = hit
                     a[mm] = fill_value
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append(dtype)
                 # propagate the source nodata so downstream per-tile
                 # masking (Perimeter, aggregate_tiles) keeps working on
                 # BucketFill output (meta.nodata is unchanged)
-                out["nodata"].append(src_nodata)
-                out["data"].append(pack(a))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, a, src_nodata))
+            yield tile_frame(out)
 
     out_df = st.join(seeded_df, ["tile_x", "tile_y"], "left") \
         .mapInPandas(wave2, TILE_SCHEMA)
@@ -422,8 +416,7 @@ def upslope_cells(
 
     def wave2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in ("tile_x", "tile_y", "width", "height",
-                                   "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 h, w = r.height, r.width
                 lm = unpack(r.line, h, w, "uint8").ravel().astype(bool)
@@ -440,14 +433,8 @@ def upslope_cells(
                 res = np.zeros(h * w, dtype=np.uint8)
                 res[up] = 2
                 res[lm] = 1
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dtype"].append("uint8")
-                out["nodata"].append(None)
-                out["data"].append(pack(res.reshape(h, w)))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, res.reshape(h, w), None))
+            yield tile_frame(out)
 
     out_df = joined.mapInPandas(wave2, TILE_SCHEMA)
     new_meta = RasterMeta(

@@ -42,7 +42,7 @@ from pyspark.sql.types import (
 
 from ..constants import D8X, D8Y, FLOWDIR_NO_DATA
 from ..kernels.strahler import strahler_order
-from ..tiles import RasterMeta, TiledRaster, pack, unpack
+from ..tiles import RasterMeta, TiledRaster, pack, tiles_from_state, unpack
 
 # mixed per-group input/output rows:
 #   kind 0 = tile state (dirs blob in round 0 / order blob out)
@@ -238,12 +238,9 @@ def strahler_order_tiled(
         metrics["changed_tiles_per_round"] = changed_counts
     state.unpersist()
 
-    out_df = orders.select(
-        "tile_x", "tile_y",
-        F.col("w").alias("width"), F.col("h").alias("height"),
-        F.lit("int32").alias("dtype"),
-        F.lit(-1.0).alias("nodata"), "data",
-    )
+    out_df = tiles_from_state(
+        orders.withColumnRenamed("w", "width")
+        .withColumnRenamed("h", "height"), "data", "int32", -1.0)
     new_meta = RasterMeta(
         width=meta.width, height=meta.height,
         tile_w=meta.tile_w, tile_h=meta.tile_h,

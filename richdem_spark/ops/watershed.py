@@ -34,7 +34,8 @@ from pyspark.sql.types import (
 
 from ..constants import D8X, D8Y, FLOWDIR_NO_DATA
 from ..kernels.d8 import exit_cell_of
-from ..tiles import TILE_SCHEMA, RasterMeta, TiledRaster, pack, unpack
+from ..tiles import (
+    TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
 from .accum import _perimeter_indices
 
 _R1_SCHEMA = StructType(
@@ -189,9 +190,7 @@ def watershed_labels(dirs: TiledRaster) -> TiledRaster:
 
     def round2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "width", "height",
-                "dtype", "nodata", "data")}
+            out = []
             for r in pdf.itertuples():
                 d = unpack(r.dirs, r.height, r.width, "uint8")
                 ex = unpack(r.exits, r.height, r.width, "int64").copy()
@@ -217,14 +216,8 @@ def watershed_labels(dirs: TiledRaster) -> TiledRaster:
                     hit = (keys[pos_c] == exf) & valid
                     terms = np.where(hit, vals[pos_c], terms)
                 terms[~valid] = -1
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dtype"].append("int64")
-                out["nodata"].append(-1.0)
-                out["data"].append(pack(terms.reshape(h, w)))
-            yield pd.DataFrame(out)
+                out.append((r.tile_x, r.tile_y, terms.reshape(h, w), -1.0))
+            yield tile_frame(out)
 
     out_df = joined.mapInPandas(round2, TILE_SCHEMA)
     new_meta = RasterMeta(

@@ -114,19 +114,13 @@ def streaming_quality_monitor(
 
 def _sum_tile_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     """Merge rows for one (tile_x, tile_y): unpack blobs, sum cellwise."""
-    from .tiles import pack, unpack
+    from .tiles import tile_frame, unpack
 
-    first = pdf.iloc[0]
     acc = None
     for r in pdf.itertuples():
         a = unpack(r.data, r.height, r.width, r.dtype)
         acc = a.copy() if acc is None else acc + a
-    return pd.DataFrame({
-        "tile_x": [int(key[0])], "tile_y": [int(key[1])],
-        "width": [int(first["width"])], "height": [int(first["height"])],
-        "dtype": [first["dtype"]], "nodata": [first["nodata"]],
-        "data": [pack(acc)],
-    })
+    return tile_frame([(key[0], key[1], acc, pdf["nodata"].iloc[0])])
 
 
 def run_incremental_rasterization_bucketed(
@@ -168,21 +162,15 @@ def run_incremental_rasterization_bucketed(
             return
         delta = rasterize_pages(
             geocode(batch_df), grid=grid, tile=tile, value="count")
-        # project to the core tile columns: rasterize_pages emits halo
-        # strip columns (tiles.HALO_STRIP_COLS) that the summed tiles
-        # would invalidate, and the re-read table may or may not carry
-        # them — the union must see one schema either way
-        cols = [f.name for f in TILE_SCHEMA.fields]
+        merged = delta
         if spark.catalog.tableExists(table):
             old = read_raster_table(spark, table)
             merged = TiledRaster(
-                old.df.select(*cols).unionByName(delta.df.select(*cols))
+                old.df.unionByName(delta.df)
                 .groupBy("tile_x", "tile_y")
                 .applyInPandas(_sum_tile_group, TILE_SCHEMA),
                 old.meta,
             )
-        else:
-            merged = TiledRaster(delta.df.select(*cols), delta.meta)
         stage = f"{table}__stage"
         write_raster_table(merged, stage)
         spark.sql(f"DROP TABLE IF EXISTS {table}")

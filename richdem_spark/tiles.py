@@ -1,9 +1,10 @@
 """Tile-table substrate: the engine's native representation of a raster.
 
-A raster is a DataFrame with one row per tile::
+A raster is a DataFrame with one row per tile, :data:`TILE_SCHEMA`::
 
     tile_x:int, tile_y:int, width:int, height:int, dtype:string,
-    nodata:double, data:binary   (row-major NumPy blob)
+    nodata:double, data:binary   (row-major NumPy blob),
+    hs_n, hs_s, hs_w, hs_e:binary (border strips of data, same dtype)
 
 plus a driver-side :class:`RasterMeta` handle carrying grid-level metadata
 (the reference's geotransform/projection/PROCESSING_HISTORY,
@@ -11,6 +12,11 @@ plus a driver-side :class:`RasterMeta` handle carrying grid-level metadata
 shape.  Tiles are the unit of parallelism — the Spark analogue of the
 reference's ``TileInfo`` grid
 (``programs/parallel_priority_flood/main.cpp:66-116``).
+
+Every tile row is built by :func:`tile_frame`, so the strips always
+exist and always match ``data``; :func:`halo_join` has one path, which
+reads only the strips.  Tables read back from disk are checked for every
+column.
 
 Scale notes (100 TB design):
 
@@ -46,6 +52,13 @@ from pyspark.sql.types import (
 
 from .constants import GRID_BOTTOM, GRID_LEFT, GRID_RIGHT, GRID_TOP
 
+# Border strips of ``data``: N row, S row, W column, E column, same
+# dtype.  Every tile row carries them, so :func:`halo_join` assembles the
+# halo exchange from these small columns in the JVM and never reads a
+# tile blob or runs a Python pass.  :func:`tile_frame` slices them from
+# the array it packs, so they always match ``data``.
+HALO_STRIP_COLS = ("hs_n", "hs_s", "hs_w", "hs_e")
+
 TILE_SCHEMA = StructType(
     [
         StructField("tile_x", IntegerType(), False),
@@ -56,22 +69,10 @@ TILE_SCHEMA = StructType(
         StructField("nodata", DoubleType(), True),
         StructField("data", BinaryType(), False),
     ]
+    + [StructField(c, BinaryType(), False) for c in HALO_STRIP_COLS]
 )
 
-# Optional border-strip columns a producing kernel can emit alongside the
-# tile blob (N row, S row, W column, E column of ``data``, same dtype).
-# They cost microseconds to slice in a kernel that already holds the
-# array, and let :func:`halo_join` assemble the halo exchange entirely in
-# the JVM — no extra Python pass over every tile per focal op (guide
-# §1.2: remove passes).  Any op that MODIFIES data and does not re-emit
-# fresh strips must drop them; mapInPandas with plain TILE_SCHEMA output
-# does that automatically, so strips exist only where explicitly emitted.
-HALO_STRIP_COLS = ("hs_n", "hs_s", "hs_w", "hs_e")
-
-TILE_HALO_SCHEMA = StructType(
-    list(TILE_SCHEMA.fields)
-    + [StructField(c, BinaryType(), True) for c in HALO_STRIP_COLS]
-)
+TILE_COLS = tuple(f.name for f in TILE_SCHEMA.fields)
 
 
 @dataclass
@@ -138,6 +139,51 @@ def pack(arr: np.ndarray) -> bytes:
 
 def unpack(blob: bytes, h: int, w: int, dtype: str) -> np.ndarray:
     return np.frombuffer(blob, dtype=np.dtype(dtype)).reshape(h, w)
+
+
+def _tile_columns(rows) -> dict[str, list]:
+    cols: dict[str, list] = {c: [] for c in TILE_COLS}
+    for tx, ty, arr, nodata in rows:
+        h, w = arr.shape
+        cols["tile_x"].append(int(tx))
+        cols["tile_y"].append(int(ty))
+        cols["width"].append(w)
+        cols["height"].append(h)
+        cols["dtype"].append(str(arr.dtype))
+        cols["nodata"].append(None if nodata is None else float(nodata))
+        cols["data"].append(pack(arr))
+        cols["hs_n"].append(pack(arr[0, :]))
+        cols["hs_s"].append(pack(arr[-1, :]))
+        cols["hs_w"].append(pack(arr[:, 0]))
+        cols["hs_e"].append(pack(arr[:, -1]))
+    return cols
+
+
+def tile_frame(rows) -> pd.DataFrame:
+    """One batch of :data:`TILE_SCHEMA` rows from ``(tile_x, tile_y, arr,
+    nodata)`` tuples: packs ``arr`` as ``data``, takes ``width``,
+    ``height`` and ``dtype`` from the array and slices the four border
+    strips from it.  Every tile row in the engine is built here."""
+    return pd.DataFrame(_tile_columns(rows))
+
+
+def tiles_from_state(
+    df: DataFrame, blob: str, dtype: str, nodata: float | None
+) -> DataFrame:
+    """Project an op's state frame onto :data:`TILE_SCHEMA` through
+    :func:`tile_frame`.  ``blob`` names the column holding the final
+    grid, packed as ``dtype`` over ``height`` x ``width``; one Python
+    pass slices its strips."""
+
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield tile_frame(
+                (r.tile_x, r.tile_y,
+                 unpack(getattr(r, blob), r.height, r.width, dtype), nodata)
+                for r in pdf.itertuples())
+
+    return df.select("tile_x", "tile_y", "width", "height", blob) \
+        .mapInPandas(run, TILE_SCHEMA)
 
 
 class TiledRaster:
@@ -209,18 +255,15 @@ def raster_from_array(
         width=w, height=h, tile_w=tile_w, tile_h=tile_h, nodata=nodata,
         dtype=str(arr.dtype), geotransform=tuple(geotransform),
     )
-    rows = []
-    for ty in range(meta.ntiles_y):
-        for tx in range(meta.ntiles_x):
-            tw, th = meta.tile_dims(tx, ty)
-            sub = arr[
-                ty * tile_h : ty * tile_h + th, tx * tile_w : tx * tile_w + tw
-            ]
-            rows.append(
-                (tx, ty, tw, th, str(arr.dtype),
-                 float(nodata) if nodata is not None else None, pack(sub))
-            )
-    df = copartition_tiles(spark.createDataFrame(rows, TILE_SCHEMA))
+    cols = _tile_columns(
+        (tx, ty,
+         arr[ty * tile_h : (ty + 1) * tile_h,
+             tx * tile_w : (tx + 1) * tile_w],
+         nodata)
+        for ty in range(meta.ntiles_y) for tx in range(meta.ntiles_x)
+    )
+    df = copartition_tiles(
+        spark.createDataFrame(list(zip(*cols.values())), TILE_SCHEMA))
     return TiledRaster(df, meta)
 
 
@@ -242,6 +285,17 @@ def copartition_tiles(df: DataFrame) -> DataFrame:
     )
 
 
+def _require_tile_columns(df: DataFrame, source: str) -> DataFrame:
+    """Tables on disk are outside input: fail early, naming every
+    :data:`TILE_SCHEMA` column the table lacks."""
+    missing = [c for c in TILE_COLS if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"{source} is not a tile table: missing column(s) "
+            + ", ".join(missing))
+    return df
+
+
 def read_raster(
     spark: SparkSession, path: str, copartition: bool = True
 ) -> TiledRaster:
@@ -253,7 +307,7 @@ def read_raster(
     the table exchange-free (see :func:`halo_join`).  A bucketed table
     (:func:`write_raster_table`) or an Iceberg table partitioned by the
     tile key makes even that ingest shuffle unnecessary."""
-    df = spark.read.parquet(path)
+    df = _require_tile_columns(spark.read.parquet(path), path)
     if copartition:
         df = copartition_tiles(df)
     import json
@@ -331,7 +385,8 @@ def read_raster_table(spark: SparkSession, table: str) -> TiledRaster:
         for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     }
     meta = RasterMeta(**json.loads(props["richdem_meta"]))
-    return TiledRaster(spark.table(table), meta)
+    return TiledRaster(
+        _require_tile_columns(spark.table(table), table), meta)
 
 
 # ---------------------------------------------------------------------------
@@ -346,52 +401,6 @@ HALO_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 # strip slot ids: position of the CONTRIBUTING strip relative to the
 # receiving tile, using the reference's D8 numbering (constants.hpp:5-10)
 #   2=NW 3=N 4=NE / 1=W 5=E / 8=SW 7=S 6=SE
-
-_HALO_SCHEMA = StructType(
-    [
-        StructField("tile_x", IntegerType(), False),
-        StructField("tile_y", IntegerType(), False),
-        StructField("slot", IntegerType(), False),
-        StructField("strip", BinaryType(), False),
-    ]
-)
-
-
-def _emit_halo_strips(meta: RasterMeta):
-    ntx, nty = meta.ntiles_x, meta.ntiles_y
-
-    def emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .constants import D8X, D8Y
-
-        for pdf in it:
-            out = {"tile_x": [], "tile_y": [], "slot": [], "strip": []}
-            for r in pdf.itertuples():
-                a = unpack(r.data, r.height, r.width, r.dtype)
-                # strips of ME that my 8 neighbours need, keyed by neighbour
-                pieces = {
-                    3: a[-1:, :],   # I'm the N neighbour of (ty+1): send S row
-                    7: a[:1, :],
-                    1: a[:, -1:],
-                    5: a[:, :1],
-                    2: a[-1:, -1:],
-                    4: a[-1:, :1],
-                    8: a[:1, -1:],
-                    6: a[:1, :1],
-                }
-                for slot, piece in pieces.items():
-                    # receiving tile = me shifted by the inverse offset
-                    ntx_, nty_ = (
-                        r.tile_x - int(D8X[slot]),
-                        r.tile_y - int(D8Y[slot]),
-                    )
-                    if 0 <= ntx_ < ntx and 0 <= nty_ < nty:
-                        out["tile_x"].append(ntx_)
-                        out["tile_y"].append(nty_)
-                        out["slot"].append(slot)
-                        out["strip"].append(pack(piece))
-            yield pd.DataFrame(out)
-
-    return emit
 
 
 def assemble_padded(
@@ -444,12 +453,13 @@ def assemble_padded(
 
 
 def _jvm_halo_strips(df: DataFrame, meta: RasterMeta) -> DataFrame:
-    """Strip table (receiver tile, slot, strip) from carried border-strip
-    columns — pure JVM codegen: one scan of the small strip columns, one
+    """Strip table (receiver tile, slot, strip) from the carried border
+    strips — pure JVM codegen: one scan of the small strip columns, one
     explode; the tile blobs are never read and no Python stage runs.
-    Matches :func:`_emit_halo_strips` piece-for-piece: N/S rows are the
-    carried strips, corners are single-element binary substrings."""
-    isz = np.dtype(meta.dtype).itemsize
+    Edges are the strips themselves; corners are single-element binary
+    substrings whose item size comes from the strip (its byte length
+    over ``width``), so it always matches the row's ``dtype``."""
+    isz = "(length(hs_n) div width)"
     ntx, nty = meta.ntiles_x, meta.ntiles_y
 
     def first(col: str):
@@ -508,13 +518,8 @@ def halo_join(tr: TiledRaster) -> DataFrame:
       tile-blob side.  tests/test_halo_plan.py asserts this.
     """
     meta = tr.meta
-    if set(HALO_STRIP_COLS).issubset(tr.df.columns):
-        strips = _jvm_halo_strips(tr.df, meta)
-    else:
-        strips = tr.df.mapInPandas(_emit_halo_strips(tr.meta), _HALO_SCHEMA)
-    packed = strips.groupBy("tile_x", "tile_y").agg(
-        F.collect_list(F.struct("slot", "strip")).alias("halo")
-    )
+    packed = _jvm_halo_strips(tr.df, meta).groupBy("tile_x", "tile_y").agg(
+        F.collect_list(F.struct("slot", "strip")).alias("halo"))
     # strips ~= 2 rings of perimeter cells at 8B + struct overhead
     perim_bytes = (
         meta.ntiles_x * meta.ntiles_y * 2 * (meta.tile_w + meta.tile_h)
@@ -558,14 +563,7 @@ def assemble_pieces(
         for r in pdf.itertuples():
             a = unpack(r.data, r.ph, r.pw, dt)
             out[r.py : r.py + r.ph, r.px : r.px + r.pw] = a
-        return pd.DataFrame(
-            {
-                "tile_x": [tx], "tile_y": [ty],
-                "width": [tw_t], "height": [th_t],
-                "dtype": [dt], "nodata": [nodata],
-                "data": [pack(out)],
-            }
-        )
+        return tile_frame([(tx, ty, out, nodata)])
 
     out_df = pieces.groupBy("tile_x", "tile_y").applyInPandas(
         paste, TILE_SCHEMA

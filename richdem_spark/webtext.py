@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .tiles import TILE_HALO_SCHEMA, TILE_SCHEMA, RasterMeta, TiledRaster, pack
+from .tiles import TILE_SCHEMA, RasterMeta, TiledRaster, tile_frame
 
 WEBTEXT_SCHEMA = StructType(
     [
@@ -287,18 +287,7 @@ def rasterize_pages(
         np.add.at(a, (ys, xs), pdf["c"].to_numpy().astype(np.float64))
         if value == "log1p":
             a = np.log1p(a)
-        # border strips ride with the tile so halo_join never needs a
-        # Python strip-emission pass over the DEM (tiles.HALO_STRIP_COLS)
-        return pd.DataFrame(
-            {
-                "tile_x": [tx], "tile_y": [ty], "width": [tw],
-                "height": [th], "dtype": ["float64"],
-                "nodata": [None], "data": [pack(a)],
-                "hs_n": [pack(a[0, :])], "hs_s": [pack(a[-1, :])],
-                "hs_w": [pack(np.ascontiguousarray(a[:, 0]))],
-                "hs_e": [pack(np.ascontiguousarray(a[:, -1]))],
-            }
-        )
+        return tile_frame([(tx, ty, a, None)])
 
     # every tile must exist (empty ocean tiles included) so the raster is
     # a full rectangle: union with a zero-count anchor row per tile
@@ -313,6 +302,5 @@ def rasterize_pages(
         "tile_x", (F.col("gx") / tile).cast("int")
     ).withColumn("tile_y", (F.col("gy") / tile).cast("int"))
     df = full.groupBy("tile_x", "tile_y").applyInPandas(
-        assemble, TILE_HALO_SCHEMA
-    )
+        assemble, TILE_SCHEMA)
     return TiledRaster(df, meta.with_history("rasterize_pages"))
