@@ -178,8 +178,9 @@ def q_knn_sites(spark, sf_dir):
 
 
 def q_knn_sites_cells(spark, sf_dir):
-    """Same kNN result through the cell-ring expansion scale path
-    (spatial.knn_join_cells) — the variant for site tables too large to
+    """Same kNN result through the cell-index scale path
+    (spatial.knn_join_cells: a cell histogram, a driver-built cell-pair
+    plan, one join and rank) — the variant for site tables too large to
     broadcast; value-checked against the identical DuckDB oracle."""
     from richdem_spark.spatial import knn_join_cells
 

@@ -135,10 +135,12 @@ def knn_join(
 ) -> DataFrame:
     """k nearest sites per point.  The site table is tiny (pour points =
     depression outlets), so it is broadcast whole and the per-point top-k
-    is computed vectorized — the cell-ring expansion variant only pays off
-    once |sites| no longer fits an executor broadcast."""
+    is computed vectorized — the cell-index variant
+    :func:`knn_join_cells` only pays off once |sites| no longer fits an
+    executor broadcast."""
     spark = points.sparkSession
-    arr = np.array([(s[1], s[2]) for s in sites], dtype=np.float64)
+    arr = np.array([(s[1], s[2]) for s in sites],
+                   dtype=np.float64).reshape(-1, 2)
     ids = np.array([s[0] for s in sites], dtype=np.int64)
     b = spark.sparkContext.broadcast((arr, ids))
 
@@ -237,7 +239,7 @@ def pair_points_with_raster(
 
 
 # ---------------------------------------------------------------------------
-# kNN at scale: cell-ring expansion (non-broadcastable site tables)
+# kNN at scale: cell histogram -> driver cell-pair plan -> one join
 # ---------------------------------------------------------------------------
 
 def knn_join_cells(
@@ -245,42 +247,44 @@ def knn_join_cells(
     sites: DataFrame,             # (site_id, lat, lon) — may be huge
     k: int = 3,
     level: int = 6,
-    rings: tuple = (1, 4, 16),
     point_id_col: str = "url",
     site_id_col: str = "site_id",
 ) -> DataFrame:
     """k nearest sites per point for site tables too large to broadcast.
 
-    Both sides key by the level-``level`` index cell; sites are exploded
-    into all cells within Chebyshev ring R of their own (site padding),
-    so a plain cell equi-join yields every candidate within R rings.  A
-    point SETTLES when it has >= k candidates whose k-th distance is at
-    most R * cell_height — cells beyond ring R are provably farther, so
-    the top-k is final.  Unsettled points retry with the next larger R;
-    the (tiny) pathological remainder finishes against the full site
-    table.  Ties break on (distance, site_id), identical to the
-    broadcast ``knn_join``.
+    Both sides key by their level-``level`` grid cell, a cell whose
+    closed lon/lat rectangle contains the row; the key is not clamped,
+    so an out-of-range coordinate keeps this property.  Three steps:
 
-    Each ring's ranked/settled/remaining frames are localCheckpointed
-    (truncating lineage so ring N does not re-run rings 1..N-1);
-    localCheckpoint trades fault tolerance for speed — blocks live on
-    executors and are not recomputable — so consume the result
-    promptly.  Superseded per-ring state is released as the loop
-    advances."""
-    cell_h = 180.0 / (1 << level)
+    1. **Histogram.** One aggregation collects the occupied point cells
+       and the site count of every occupied site cell.
+    2. **Plan.** For each point cell ``c`` the driver computes ``U(c)``,
+       the smallest rectangle-to-rectangle *max* distance from ``c`` at
+       which the site cells hold >= k sites.  Every point of ``c`` lies
+       within ``U(c)`` of each of those sites, so ``U(c)`` is a certified
+       upper bound on its k-th neighbour distance, and a site cell whose
+       rectangle *min* distance from ``c`` exceeds it cannot hold a
+       top-k site.  The plan keeps every other occupied site cell, with
+       a tiny relative slack so that rounding can only add candidates,
+       never drop a tied one.  With fewer than k sites in all, ``U(c)``
+       is infinite.  The plan is built in blocks of point cells, so
+       driver memory is O(block x occupied site cells).
+    3. **Join and rank.** Each site joins the broadcast plan on its
+       cell, which keys it by every point cell that needs it; the points
+       join on their own cell.  A window over (cell, point) ranks each
+       point's candidates by (squared distance, site_id), the tie rule
+       of the broadcast :func:`knn_join`, and keeps ``rank <= k``.  The
+       window partitions on the join key, so ranking adds no shuffle.
 
-    # JVM cell key (no per-row python): replicate cell_id's binning
+    The bound is exact, so no point needs a second pass: whatever the
+    data, the function runs one histogram aggregation and one
+    join-and-rank query, and pins no checkpoint."""
+    from pyspark.sql.window import Window
+
     n_cells = 1 << level
-    bx = F.least(
-        F.lit(n_cells - 1),
-        F.floor((F.col("lon") + 180.0) / 360.0 * n_cells),
-    ).cast("long")
-    by = F.least(
-        F.lit(n_cells - 1),
-        F.floor((F.col("lat") + 90.0) / 180.0 * n_cells),
-    ).cast("long")
-    # Morton interleave is unnecessary for the equi-join: (bx, by) IS the
-    # cell key
+    cw, ch = 360.0 / n_cells, 180.0 / n_cells
+    bx = F.floor((F.col("lon") + 180.0) / 360.0 * n_cells)
+    by = F.floor((F.col("lat") + 90.0) / 180.0 * n_cells)
     pts = points.select(
         F.col(point_id_col).alias("point_id"), "lat", "lon",
         bx.alias("cx"), by.alias("cy"),
@@ -291,106 +295,55 @@ def knn_join_cells(
         bx.alias("scx"), by.alias("scy"),
     )
 
-    out_parts = []
-    remaining = pts
-    w_rank = None
-    from pyspark.sql.window import Window
+    # 1. histogram: (cx, cy, points in cell, sites in cell)
+    hist = (
+        pts.select("cx", "cy", F.lit(1).alias("p"), F.lit(0).alias("s"))
+        .unionByName(st.select(F.col("scx").alias("cx"),
+                               F.col("scy").alias("cy"),
+                               F.lit(0).alias("p"), F.lit(1).alias("s")))
+        .groupBy("cx", "cy").agg(F.sum("p"), F.sum("s"))
+        .dropna()
+        .collect()
+    )
+    h = np.array([tuple(r) for r in hist], dtype=np.int64).reshape(-1, 4)
+    pcells = h[h[:, 2] > 0, :2]
+    scells, cnt = h[h[:, 3] > 0, :2], h[h[:, 3] > 0, 3]
 
-    for ring in rings:
-        if remaining.isEmpty():
-            break
-        offs = [(dx, dy) for dx in range(-ring, ring + 1)
-                for dy in range(-ring, ring + 1)]
-        off_df = remaining.sparkSession.createDataFrame(
-            offs, "dx int, dy int")
-        padded = (
-            st.crossJoin(F.broadcast(off_df))
-            .select(
-                "site_id", "slat", "slon",
-                (F.col("scx") + F.col("dx")).alias("cx"),
-                (F.col("scy") + F.col("dy")).alias("cy"),
-            )
-            .where((F.col("cx") >= 0) & (F.col("cx") < n_cells)
-                   & (F.col("cy") >= 0) & (F.col("cy") < n_cells))
-        )
-        cand = remaining.join(padded, ["cx", "cy"]).withColumn(
-            "dist_deg",
-            F.sqrt((F.col("lat") - F.col("slat")) ** 2
-                   + (F.col("lon") - F.col("slon")) ** 2),
-        )
-        w_rank = Window.partitionBy("point_id").orderBy(
-            "dist_deg", "site_id")
-        # each ring's ranked set feeds three consumers (the settled
-        # output, the settle test, the anti-join that defines the next
-        # ring's input) and the next ring's isEmpty() is an action —
-        # without materialization every ring RE-RUNS all previous
-        # rings' joins, and the final action re-runs the lot again
-        # (guide §1.2).  localCheckpoint pins each ring's small result
-        # (<= k rows/point) and truncates the lineage.
-        ranked = cand.withColumn("rank", F.row_number().over(w_rank)) \
-            .where(F.col("rank") <= k).localCheckpoint(eager=True)
-        stats = ranked.groupBy("point_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("dist_deg").alias("dk"),
-        )
-        # Strict inequality: a site exactly at Chebyshev distance
-        # ring*cell_h (adjacent cell edge in the latitude direction) can
-        # lie just outside the explored rings; at equality a tied site
-        # with smaller site_id could be wrongly excluded, violating the
-        # (distance, site_id) tie rule of the broadcast knn_join.
-        settled_ids = stats.where(
-            (F.col("n") >= k) & (F.col("dk") < ring * cell_h)
-        ).select("point_id").localCheckpoint(eager=True)
-        # NO forced broadcast here: at scale MOST points settle in ring 1,
-        # so settled_ids is proportional to the full point table —
-        # broadcasting it is an executor-OOM risk at 100 TB.  Left to
-        # AQE, these are shuffle joins on point_id (or runtime broadcasts
-        # when stats say the side really is small).
-        out_parts.append(
-            ranked.join(settled_ids, "point_id", "left_semi")
-            .select("point_id", "site_id", "rank", "dist_deg")
-        )
-        prev_remaining = remaining
-        remaining = remaining.join(settled_ids, "point_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        # the new checkpoint truncates lineage, so the superseded ring's
-        # remaining blocks can be released (ranked/settled checkpoints
-        # must outlive the caller's action and are left pinned — the
-        # localCheckpoint durability trade-off, documented above)
-        if prev_remaining is not pts:
-            prev_remaining.unpersist()
+    # 2. plan: (cx, cy, scx, scy) for every site cell within U(c)
+    plan = [np.empty((0, 4), dtype=np.int64)]
+    block = max(1, (1 << 20) // max(1, len(scells)))
+    for i in range(0, len(pcells), block):
+        c = pcells[i:i + block]
+        dx = np.abs(c[:, None, 0] - scells[None, :, 0])
+        dy = np.abs(c[:, None, 1] - scells[None, :, 1])
+        far = np.hypot((dx + 1) * cw, (dy + 1) * ch)
+        near = np.hypot(np.maximum(dx - 1, 0) * cw,
+                        np.maximum(dy - 1, 0) * ch)
+        if cnt.sum() < k:
+            u = np.full(len(c), np.inf)
+        else:
+            order = np.argsort(far, axis=1)
+            first = (np.cumsum(cnt[order], axis=1) < k).sum(axis=1)
+            u = far[np.arange(len(c)), order[np.arange(len(c)), first]]
+        ci, si = np.nonzero(near <= u[:, None] * (1 + 1e-9))
+        plan.append(np.column_stack([c[ci], scells[si]]))
+    plan_df = points.sparkSession.createDataFrame(
+        pd.DataFrame(np.concatenate(plan),
+                     columns=["cx", "cy", "scx", "scy"]),
+        "cx long, cy long, scx long, scy long")
 
-    # pathological remainder: full join (tiny left side by construction)
-    if not remaining.isEmpty():
-        cand = remaining.crossJoin(
-            st.select("site_id", "slat", "slon")
-        ).withColumn(
-            "dist_deg",
-            F.sqrt((F.col("lat") - F.col("slat")) ** 2
-                   + (F.col("lon") - F.col("slon")) ** 2),
-        )
-        w_rank = Window.partitionBy("point_id").orderBy(
-            "dist_deg", "site_id")
-        out_parts.append(
-            cand.withColumn("rank", F.row_number().over(w_rank))
-            .where(F.col("rank") <= k)
-            .select("point_id", "site_id", "rank", "dist_deg")
-        )
-
-    if not out_parts:
-        # empty points input: every branch above was skipped
-        spark = points.sparkSession
-        return spark.createDataFrame(
-            [],
-            StructType([
-                StructField("point_id",
-                            points.schema[point_id_col].dataType, True),
-                StructField("site_id", LongType(), True),
-                StructField("rank", IntegerType(), False),
-                StructField("dist_deg", DoubleType(), True),
-            ]),
-        )
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # 3. one join and rank.  Ranking on the squared distance, as knn_join
+    # does, keeps the tie rule exact: sqrt can map two squares to one
+    # double.
+    d2 = ((F.col("lat") - F.col("slat")) ** 2
+          + (F.col("lon") - F.col("slon")) ** 2)
+    w_rank = Window.partitionBy("cx", "cy", "point_id").orderBy(
+        "d2", "site_id")
+    return (
+        pts.join(st.join(F.broadcast(plan_df), ["scx", "scy"]), ["cx", "cy"])
+        .withColumn("d2", d2)
+        .withColumn("rank", F.row_number().over(w_rank))
+        .where(F.col("rank") <= k)
+        .select("point_id", "site_id", "rank",
+                F.sqrt("d2").alias("dist_deg"))
+    )

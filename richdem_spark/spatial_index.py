@@ -7,7 +7,7 @@ plain SQL oracles.
 Cell id layout (uint64): ``(level << 58) | morton`` where ``morton``
 interleaves the bits of the x/y bin indices at ``2^level`` resolution per
 axis over the WGS84 lon/lat rectangle.  Parent/child is a 2-bit shift —
-the property kNN ring expansion and raster tiling rely on.
+the property raster tiling relies on.
 """
 
 from __future__ import annotations

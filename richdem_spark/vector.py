@@ -280,6 +280,12 @@ def ivf_topk(
     :func:`cosine_topk`."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
 
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -315,8 +321,8 @@ def ivf_topk(
                     out["cell"].append(int(c0))
             yield pd.DataFrame(out)
 
-    pd_cells = probes.mapInPandas(
-        probe_cells, "probe_id long, pvec array<double>, cell int")
+    pd_cells = probes.mapInPandas(probe_cells, StructType(
+        probes.schema.fields + [StructField("cell", IntegerType())]))
 
     cand = assigned.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
@@ -347,8 +353,9 @@ def ivf_topk(
                                 "cand_id": pdf["cand_id"],
                                 "cos_raw": cos})
 
-    sims = pairs.mapInPandas(
-        pair_cosine, "probe_id long, cand_id long, cos_raw double"
+    sims = pairs.mapInPandas(pair_cosine, StructType(
+        pairs.select("probe_id", "cand_id").schema.fields
+        + [StructField("cos_raw", DoubleType())])
     ).withColumn("cosine", F.round(F.col("cos_raw"), 6))
     w = Window.partitionBy("probe_id").orderBy(
         F.desc("cosine"), F.asc("cand_id")

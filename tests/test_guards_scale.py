@@ -116,7 +116,7 @@ def test_knn_cells_no_forced_settled_broadcast(spark):
         "site_id long, lat double, lon double")
     out = knn_join_cells(pts, sites, k=2, level=4)
     plan = out._jdf.queryExecution().logical().toString()
-    # the only broadcast hints permitted are the tiny ring-offset tables
+    # the only broadcast hint permitted is the small cell-pair plan
     for line in plan.splitlines():
         if "ResolvedHint" in line or "UnresolvedHint" in line:
             assert "point_id" not in line, line
@@ -247,6 +247,32 @@ def test_ivf_topk_exact_and_recall(spark):
     exact_pairs = {(p, c) for (p, c, _r) in ex}
     recall = len(ap & exact_pairs) / len(exact_pairs)
     assert recall >= 0.7, f"IVF recall {recall:.2f} below floor"
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_ivf_topk_keeps_id_and_vector_types(spark, id_type):
+    """ivf_topk's Python stages take their id and vector types from the
+    input table: int and string ids and array<float> vectors come back
+    as they went in, and the exact configuration still matches brute
+    force."""
+    from richdem_spark.vector import cosine_topk, ivf_topk
+
+    rng = np.random.default_rng(23)
+    centers = rng.normal(size=(4, 8))
+    ids = [i if id_type == "int" else f"v{i:03d}" for i in range(80)]
+    rows = [(vid, [float(x) for x in centers[i % 4]
+                   + rng.normal(scale=0.2, size=8)])
+            for i, vid in enumerate(ids)]
+    df = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<float>")
+    probes = ids[:4]
+
+    got = ivf_topk(df, probes, k=5, n_centroids=4, nprobe=4, iters=2)
+    assert got.schema["probe_id"].dataType == df.schema["vec_id"].dataType
+    assert got.schema["cand_id"].dataType == df.schema["vec_id"].dataType
+    exact = cosine_topk(df, probes, k=5)
+    assert ({(r.probe_id, r.cand_id, r.rank) for r in got.collect()}
+            == {(r.probe_id, r.cand_id, r.rank) for r in exact.collect()})
 
 
 def test_near_dup_clusters_components(spark):

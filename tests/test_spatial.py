@@ -3,11 +3,13 @@ cast, cell-cover candidate pruning, kNN, raster<->vector pairing, and the
 spatial index itself."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from richdem_spark.spatial import (
     assign_points_to_polygons,
     knn_join,
+    knn_join_cells,
     pair_points_with_raster,
     point_in_polygon,
 )
@@ -141,3 +143,89 @@ def test_knn_cell_ring_matches_broadcast(spark):
     got = {(r.point_id, r.rank): (r.site_id, round(r.dist_deg, 9))
            for r in knn_join_cells(pdf, sdf, k=3, level=4).collect()}
     assert got == gold
+
+
+def _grid(rng, n, lat0, lon0, half):
+    """n (lat, lon) pairs on the 0.001 deg grid within ``half`` steps of
+    (lat0, lon0)."""
+    d = rng.integers(-half, half + 1, (n, 2))
+    return [(round(lat0 + a * 0.001, 3), round(lon0 + b * 0.001, 3))
+            for a, b in d.tolist()]
+
+
+def _knn_edge_case(case):
+    """(points, sites) for one knn_join_cells edge case.  (0, 0) and
+    (45, 90) are cell corners at every level the test uses."""
+    rng = np.random.default_rng(3100)
+    spread = _grid(rng, 40, 0.0, 0.0, 80000)
+    if case == "edge_ties":
+        pts = _grid(rng, 30, 0.0, 0.0, 4) + _grid(rng, 30, 45.0, 90.0, 4)
+        sts = _grid(rng, 12, 0.0, 0.0, 4) + _grid(rng, 12, 45.0, 90.0, 4)
+    elif case == "one_cell":
+        pts, sts = spread, _grid(rng, 10, 10.15, 20.15, 50)
+    elif case == "fewer_than_k":
+        pts, sts = spread, spread[:2]
+    elif case == "no_sites":
+        pts, sts = spread, []
+    elif case == "poles_antimeridian":
+        pts = [(la, lo) for la in (-90.0, 0.0, 90.0)
+               for lo in (-180.0, 0.0, 180.0)]
+        sts = spread + [(90.0, 179.9), (-89.9, -180.0), (0.0, 180.0)]
+    else:  # lon_out_of_range
+        pts = [(0.0, -190.0), (12.5, -190.0), (-30.0, -179.0)]
+        sts = spread + [(0.0, -179.0), (10.0, 170.0)]
+    return ([(f"p{i}", la, lo) for i, (la, lo) in enumerate(pts)],
+            [(i, la, lo) for i, (la, lo) in enumerate(sts)])
+
+
+@pytest.mark.parametrize("level", [2, 4, 6])
+@pytest.mark.parametrize("case", [
+    "edge_ties", "one_cell", "fewer_than_k", "no_sites",
+    "poles_antimeridian", "lon_out_of_range"])
+def test_knn_cells_edge_cases_match_broadcast(spark, case, level):
+    """knn_join_cells equals the broadcast knn_join, (distance, site_id)
+    tie rule included, where its cell-pair plan is easiest to get wrong:
+    exact ties across cell edges, sites piled in one cell, fewer sites
+    than k, no sites at all, and points on or beyond the range edges."""
+    k = 3
+    pts, sites = _knn_edge_case(case)
+    if case == "edge_ties":
+        # the case must hold exact ties at the k-th distance
+        P = np.array([p[1:] for p in pts])
+        S = np.array([s[1:] for s in sites])
+        d2 = np.sort(((P[:, None, :] - S[None, :, :]) ** 2).sum(-1), 1)
+        assert (d2[:, k - 1] == d2[:, k]).any()
+    pdf = spark.createDataFrame(pts, "url string, lat double, lon double")
+    sdf = spark.createDataFrame(sites, "site_id long, lat double, lon double")
+    gold = {(r.point_id, r.rank): (r.site_id, r.dist_deg)
+            for r in knn_join(pdf, sites, k=k).collect()}
+    got = [(r.point_id, r.rank, r.site_id, r.dist_deg)
+           for r in knn_join_cells(pdf, sdf, k=k, level=level).collect()]
+    assert {(p, r): (s, d) for p, r, s, d in got} == gold
+    assert len(got) == len(gold) == len(pts) * min(k, len(sites))
+
+
+def test_knn_cells_job_budget(spark, tmp_path):
+    """knn_join_cells runs a fixed, small number of Spark jobs: two for
+    the cell histogram, at most four for the one join-and-rank query.
+    The inputs are parquet tables, as the entry queries read them."""
+    rng = np.random.default_rng(7)
+    pts, sts = str(tmp_path / "points"), str(tmp_path / "sites")
+    spark.createDataFrame(
+        [(f"u{i}", float(la), float(lo)) for i, (la, lo) in enumerate(
+            zip(rng.uniform(-60, 60, 2000), rng.uniform(-170, 170, 2000)))],
+        "url string, lat double, lon double").write.parquet(pts)
+    spark.createDataFrame(
+        [(i, float(la), float(lo)) for i, (la, lo) in enumerate(
+            zip(rng.uniform(-60, 60, 200), rng.uniform(-170, 170, 200)))],
+        "site_id long, lat double, lon double").write.parquet(sts)
+    pdf, sdf = spark.read.parquet(pts), spark.read.parquet(sts)
+    sc = spark.sparkContext
+    group = "test_knn_cells_job_budget"
+    sc.setJobGroup(group, "knn_join_cells job budget")
+    try:
+        rows = knn_join_cells(pdf, sdf, k=3, level=6).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 2000 * 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
