@@ -16,10 +16,13 @@ Execution plan (exactly the paper's O(perimeter) communication bound):
    graph seeded from the ocean at -inf (main.cpp:498-545).  The graph is
    |labels|-sized — ~4·sqrt(cells/tile) per tile — vastly smaller than
    the raster.
-4. **Round 2** (mapInPandas): raise each cell to
-   ``max(filled, graph_elev[label])`` (main.cpp:315-330).  Water levels
-   are shipped back by a JOIN on tile id (not a driver broadcast), so the
-   solve result never needs to fit in one executor's broadcast budget.
+4. **Round 2** (one mapInPandas over round 1, on every tile): raise each
+   cell to ``max(filled, graph_elev[label])`` (main.cpp:315-330).  A
+   tile without water levels is repacked unchanged, so the output keeps
+   the input's partitioning.  Small level sets ride in the round-2
+   closure; larger ones are broadcast-joined on tile id.  If the solve
+   raises nothing (and ``epsilon`` is off) round 2 is skipped and the
+   round-1 grids are the output.
 """
 
 from __future__ import annotations
@@ -78,7 +81,6 @@ _R1_SCHEMA = StructType(
         StructField("elv_ne", DoubleType(), False),
         StructField("elv_sw", DoubleType(), False),
         StructField("elv_se", DoubleType(), False),
-        StructField("zmin", DoubleType(), False),
     ]
 )
 
@@ -179,12 +181,6 @@ def _round1(meta: RasterMeta, topology: str, metrics=None):
                 out["elv_ne"].append(float(filled[0, -1]))
                 out["elv_sw"].append(float(filled[-1, 0]))
                 out["elv_se"].append(float(filled[-1, -1]))
-                dmask = (a != r.nodata) if r.nodata is not None else None
-                out["zmin"].append(
-                    float(filled[dmask].min()) if dmask is not None
-                    and dmask.any() else float(filled.min())
-                    if dmask is None else float("inf")
-                )
             yield pd.DataFrame(out)
 
     return run
@@ -411,10 +407,9 @@ def fill_depressions(
 
     driver_solved = perim_estimate <= driver_solve_max(
         spark, DRIVER_SOLVE_MAX_PERIM)
-    zmin_of: dict[int, float] = {}
     if driver_solved:
         # Arrow collect (see ops/accum.py) — the strips dominate bytes
-        perim = list(r1.select(*_PERIM_COLS, "zmin").toPandas()
+        perim = list(r1.select(*_PERIM_COLS).toPandas()
                      .itertuples(index=False))
         graph_elev = graph_priority_flood(_driver_edges(perim, topology))
         lvl_rows = [
@@ -422,11 +417,6 @@ def fill_depressions(
             for l, z in graph_elev.items()
             if l > 1 and z != -np.inf
         ]
-        zmin_of = {
-            int(r.tile_y) * ntx + int(r.tile_x): float(r.zmin)
-            for r in perim
-        }
-        lvl_flat = None  # driver path never reads the flat frame
     else:
         in_tile_edges = r1.select(
             F.explode(F.arrays_zip("edge_a", "edge_b", "edge_z")).alias("e")
@@ -470,103 +460,58 @@ def fill_depressions(
 
     lvl_struct = ArrayType(StructType([StructField("label", LongType()),
                                        StructField("level", DoubleType())]))
-    need_tids: list[int] | None = None
-    lvl_map: dict[int, list] | None = None
+    # per-tile water levels reach round 2 one of two ways: small
+    # driver solves ride in the round-2 closure (a few KB pickled per
+    # task — no createDataFrame, no broadcast-exchange job, no join);
+    # large ones are broadcast-joined on tile id
+    lvl_map: dict[int, list] = {}
+    lvl_df = None
     if driver_solved:
-        # the solve ran on the driver, so the per-tile level lists and
-        # the needs-raise tile set are already in hand — build both as
-        # literal DataFrames instead of re-deriving them from the r1
-        # cache (the former plan ran a groupBy job over lvl_flat plus a
-        # max/join/filter subtree over r1 for need_df: three extra
-        # broadcast-build jobs per fill at bench scale, each paying the
-        # full Python-stage floor; guide §1.2 — remove passes that
-        # recompute what the driver already knows).  Small solves skip
-        # even the literal DataFrame: the level lists ride in the
-        # round-2 closure (a few KB pickled per task) — no
-        # createDataFrame, no broadcast-exchange job, no join.
-        if lvl_rows:
-            by_tid: dict[int, list] = {}
-            for tid_, lab_, lev_ in lvl_rows:
-                by_tid.setdefault(tid_, []).append(
-                    {"label": lab_, "level": lev_})
-            need_tids = [
-                t for t, v in by_tid.items()
-                if max(s["level"] for s in v) > zmin_of[t]
-            ]
-            if len(lvl_rows) <= 10_000:
-                lvl_map = by_tid
-                lvl_df = None
-            else:
-                lvl_df = spark.createDataFrame(
-                    [(t, [(s["label"], s["level"]) for s in v])
-                     for t, v in by_tid.items()],
-                    StructType([StructField("tid", IntegerType(), False),
-                                StructField("levels", lvl_struct)]))
+        # the solve ran on the driver, so the per-tile level lists are
+        # already in hand: no pass over round 1 re-derives them
+        by_tid: dict[int, list] = {}
+        for tid_, lab_, lev_ in lvl_rows:
+            by_tid.setdefault(tid_, []).append(
+                {"label": lab_, "level": lev_})
+        if len(lvl_rows) <= 10_000:
+            lvl_map = by_tid
         else:
-            lvl_df = None
-    else:
+            lvl_df = spark.createDataFrame(
+                [(t, [(s["label"], s["level"]) for s in v])
+                 for t, v in by_tid.items()],
+                StructType([StructField("tid", IntegerType(), False),
+                            StructField("levels", lvl_struct)]))
+    elif lvl_flat is not None:
         lvl_df = (
             lvl_flat
             .groupBy("tid")
             .agg(F.collect_list(F.struct("label", "level")).alias("levels"))
-            if lvl_flat is not None
-            else None
         )
 
-    r1k = r1.withColumn(
-        "tid", (F.col("tile_y") * F.lit(ntx) + F.col("tile_x")).cast("int")
-    )
-
-    # pass-through fast path: a tile only needs the Python raise pass if
-    # some of its labels' water level exceeds the tile's minimum filled
-    # elevation; ocean/unaffected tiles are forwarded JVM-side untouched
-    passthrough = None
-    # round 1 packed the filled grid as float64, with its border strips
-    # in elv_*: projected onto the tile columns, that is the output
-    tile_cols = [
-        "tile_x", "tile_y", "width", "height", "dtype", "nodata", "data",
-        F.col("elv_n").alias("hs_n"), F.col("elv_s").alias("hs_s"),
-        F.col("elv_w").alias("hs_w"), F.col("elv_e").alias("hs_e"),
-    ]
     new_meta = replace(meta, dtype="float64").with_history(
         f"fill_depressions(topology={topology}, epsilon={epsilon})")
-    if not epsilon:
-        if lvl_df is None and lvl_map is None:
-            return TiledRaster(r1.select(*tile_cols), new_meta)
-        # pass-through fast path selection stays JVM-side: a tile needs
-        # the Python raise pass only if some label's water level exceeds
-        # the tile's minimum filled elevation
-        if need_tids is not None and len(need_tids) <= 256:
-            # small set: plain isin predicates — no DataFrame build, no
-            # broadcast-exchange jobs
-            lst = [int(t) for t in need_tids]
-            passthrough = r1k.where(~F.col("tid").isin(lst)) \
-                .select(*tile_cols)
-            r1k = r1k.where(F.col("tid").isin(lst))
-        else:
-            if need_tids is not None:
-                need_df = spark.createDataFrame(
-                    [(int(t),) for t in need_tids],
-                    StructType([StructField("tid", IntegerType(),
-                                            False)]))
-            else:
-                need_df = (
-                    lvl_flat.groupBy("tid").agg(F.max("level").alias("mx"))
-                    .join(r1k.select("tid", "zmin"), "tid")
-                    .where(F.col("mx") > F.col("zmin"))
-                    .select("tid")
-                )
-            passthrough = r1k.join(
-                F.broadcast(need_df), "tid",
-                "left_anti").select(*tile_cols)
-            r1k = r1k.join(F.broadcast(need_df), "tid", "left_semi")
+    if not epsilon and lvl_df is None and not lvl_map:
+        # nothing to raise: round 1 packed the filled grid as float64,
+        # with its border strips in elv_*; projected onto the tile
+        # columns, that is the output
+        return TiledRaster(r1.select(
+            "tile_x", "tile_y", "width", "height", "dtype", "nodata",
+            "data",
+            F.col("elv_n").alias("hs_n"), F.col("elv_s").alias("hs_s"),
+            F.col("elv_w").alias("hs_w"), F.col("elv_e").alias("hs_e"),
+        ), new_meta)
 
-    if lvl_map is not None:
-        joined = r1k          # levels ride in the round-2 closure
-    elif lvl_df is not None:
-        joined = r1k.join(F.broadcast(lvl_df), "tid", "left")
+    # round 2 runs on EVERY tile, as one mapInPandas over round 1, so the
+    # output keeps the input's partitioning: a tile with no levels is
+    # repacked unchanged (max with the -inf default is a no-op)
+    levels_col = lvl_df is not None
+    if levels_col:
+        joined = r1.withColumn(
+            "tid",
+            (F.col("tile_y") * F.lit(ntx) + F.col("tile_x")).cast("int"),
+        ).join(F.broadcast(lvl_df), "tid", "left")
     else:
-        joined = r1k.withColumn("levels", F.lit(None).cast(lvl_struct))
+        joined = r1
 
     eps = bool(epsilon)
 
@@ -581,8 +526,8 @@ def fill_depressions(
                 ).copy()
                 labels = unpack(r.labels, r.height, r.width, "int64")
                 levels = (
-                    lvl_map.get(int(r.tile_y) * ntx + int(r.tile_x))
-                    if lvl_map is not None else r.levels
+                    r.levels if levels_col
+                    else lvl_map.get(int(r.tile_y) * ntx + int(r.tile_x))
                 )
                 if levels is not None and len(levels):
                     lk = np.array([int(s["label"]) for s in levels],
@@ -606,7 +551,4 @@ def fill_depressions(
                 out.append((r.tile_x, r.tile_y, filled, r.nodata))
             yield tile_frame(out)
 
-    out_df = joined.mapInPandas(round2, TILE_SCHEMA)
-    if passthrough is not None:
-        out_df = out_df.unionByName(passthrough)
-    return TiledRaster(out_df, new_meta)
+    return TiledRaster(joined.mapInPandas(round2, TILE_SCHEMA), new_meta)

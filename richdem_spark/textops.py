@@ -62,7 +62,15 @@ def _spread(df: DataFrame) -> DataFrame:
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
              n: int = 3, distinct: bool = True) -> DataFrame:
     """Word n-gram shingle table (id, shingle) — the primitive under
-    MinHash, Jaccard and fingerprinting.  split/explode stay in codegen.
+    MinHash, Jaccard and fingerprinting.
+
+    Each page's text is split ONCE into a ``toks`` column; the n-grams
+    are ``concat_ws(' ', slice(toks, pos + 1, n))`` over
+    ``posexplode_outer(toks)`` rows with ``pos <= size(toks) - n``, all
+    codegen'd expressions.  (A ``transform`` lambda over positions
+    would re-evaluate the split once per shingle: Catalyst does not
+    hoist it out of the lambda body.)  A page with fewer than ``n``
+    tokens, an empty or blank one included, yields no shingles.
 
     ``distinct=True`` dedups (id, shingle) pairs — a full shuffle of the
     largest table in the pipeline.  Every consumer in this module can
@@ -70,13 +78,18 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Jaccard/guard aggregations dedup inside their own shuffle
     (collect_set / count_distinct partial-aggregate map-side), so pass
     ``distinct=False`` when feeding them and save the shuffle."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
     src = _spread(df.select(F.col(id_col), F.col(text_col)))
-    out = src.select(F.col(id_col), F.explode(grams).alias("shingle"))
+    toks = src.select(
+        id_col, F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"))
+    # _outer: for an inner posexplode Catalyst infers a size(toks) > 0
+    # filter and pushes it below the projection, splitting the text
+    # twice more; the pos filter drops the outer form's null row
+    out = (
+        toks.select(id_col, "toks", F.posexplode_outer("toks"))
+        .where(F.col("pos") <= F.size("toks") - n)
+        .select(id_col, F.concat_ws(
+            " ", F.slice("toks", F.col("pos") + 1, n)).alias("shingle"))
+    )
     return out.distinct() if distinct else out
 
 

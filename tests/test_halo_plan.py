@@ -103,3 +103,31 @@ def test_bucketed_table_zero_exchange_tile_side(spark, monkeypatch):
         assert all(rows.values())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_fill_keeps_input_partitioning(spark):
+    """Fill's round 2 is one mapInPandas over round 1 on every tile, so
+    the output carries the input's partitioning even when only some
+    tiles are raised — no pass-through union doubling the partition
+    count for every downstream per-tile stage."""
+    from richdem_spark.api import FillDepressions
+    from richdem_spark.kernels.fill import priority_flood_fill
+
+    # a ramp draining to the west edge, plus a pit straddling the four
+    # tiles around (2..3, 1..2): those are raised, the west ones not
+    dem = np.tile(np.arange(16.0) + 10.0, (16, 1))
+    dem[4:12, 9:15] = 5.0
+    want = priority_flood_fill(dem)
+    tiles_changed = {
+        (tx, ty): bool((want[ty * 4:ty * 4 + 4, tx * 4:tx * 4 + 4]
+                        != dem[ty * 4:ty * 4 + 4,
+                               tx * 4:tx * 4 + 4]).any())
+        for tx in range(4) for ty in range(4)
+    }
+    assert any(tiles_changed.values()) and not all(tiles_changed.values())
+
+    tr = T.raster_from_array(spark, dem, tile_w=4, tile_h=4)
+    out = FillDepressions(tr)
+    assert (out.df.rdd.getNumPartitions()
+            == tr.df.rdd.getNumPartitions())
+    np.testing.assert_array_equal(out.to_array(), want)

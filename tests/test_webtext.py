@@ -125,3 +125,62 @@ def test_vectorized_generation_matches_scalar_construction(spark):
         r = by_id[int(i)]
         assert bytes(r.html) == html
         assert r.text == extract_text(html)
+
+
+def test_short_pages_match_oracle(spark, tmp_path):
+    """Pages with fewer than n=3 tokens (empty, blank, one or two words)
+    emit no shingles, as in the DuckDB twin, instead of failing the
+    shingle-based queries."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+
+    texts = ["", "   ", "a", "a b", "a b c",
+             "six words on this one page", "six words on this one page",
+             "the quick brown fox jumps over the lazy dog",
+             "the quick brown fox jumps over the lazy cat",
+             "rivers carve valleys  through the old  hills",
+             "rivers carve valleys through the old hills slowly"]
+    pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64),
+                  "text": texts}).to_parquet(
+        tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute("create view documents as select * from "
+                f"'{tmp_path / 'documents.parquet'}'")
+    oracles = entrymod.oracle_sql()
+    queries = entrymod.queries()
+
+    def norm(rows):
+        return sorted(tuple(round(v, 6) if isinstance(v, float) else v
+                            for v in r) for r in rows)
+
+    for name in ("minhash_lsh_pairs", "ngram_jaccard"):
+        sdf = queries[name](spark, str(tmp_path))
+        got = norm(tuple(r) for r in sdf.collect())
+        res = con.execute(oracles[name])
+        cols = [d[0] for d in res.description]
+        assert cols == sdf.columns, name
+        want = norm(res.fetchall())
+        assert got == want, name
+        assert (5, 6) in {r[:2] for r in got}, name
+
+
+def test_shingles_split_each_page_once(spark, tmp_path):
+    """The executed plan splits the text exactly once per page and has
+    no higher-order-function lambda (which would re-split it once per
+    shingle)."""
+    import pandas as pd
+
+    from richdem_spark.textops import shingles
+
+    pd.DataFrame({"doc_id": np.arange(4, dtype=np.int64),
+                  "text": ["a b c d", "e f g", "h", ""]}).to_parquet(
+        tmp_path / "docs.parquet")
+    sh = shingles(spark.read.parquet(str(tmp_path / "docs.parquet")),
+                  distinct=False)
+    plan = sh._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(") == 1, plan
+    assert "lambdafunction" not in plan, plan
+    assert sorted(tuple(r) for r in sh.collect()) == [
+        (0, "a b c"), (0, "b c d"), (1, "e f g")]
