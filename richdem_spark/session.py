@@ -13,9 +13,14 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """``extra_conf`` merges additional settings (e.g. executor memory
-    and env for ``local-cluster[...]`` masters, which launch real
-    separate executor JVMs — the multi-JVM scaling evidence path)."""
+    """``extra_conf`` is applied last, so it can override any setting
+    here (driver memory, shuffle partitions, ...) or add more (e.g.
+    executor memory and env for ``local-cluster[...]`` masters, which
+    launch real separate executor JVMs — the multi-JVM scaling evidence
+    path).
+
+    Python workers skip the per-task zip directory re-reads once they
+    have imported the package: see :mod:`richdem_spark.pyworker`."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     sp = int(shuffle_partitions or cpus)
@@ -23,11 +28,8 @@ def get_spark(
     # across tiles, not within; oversubscription thrashes at local[32]
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(v, "1")
-    b = SparkSession.builder.master(master)
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    return (
-        b
+    b = (
+        SparkSession.builder.master(master)
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.adaptive.enabled", "true")
@@ -39,5 +41,7 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    for k, v in (extra_conf or {}).items():
+        b = b.config(k, v)
+    return b.getOrCreate()

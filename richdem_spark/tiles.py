@@ -460,42 +460,31 @@ def _jvm_halo_strips(df: DataFrame, meta: RasterMeta) -> DataFrame:
     substrings whose item size comes from the strip (its byte length
     over ``width``), so it always matches the row's ``dtype``."""
     isz = "(length(hs_n) div width)"
-    ntx, nty = meta.ntiles_x, meta.ntiles_y
-
-    def first(col: str):
-        return F.expr(f"substring({col}, 1, {isz})")
-
-    def last(col: str):
-        return F.expr(f"substring({col}, (width - 1) * {isz} + 1, {isz})")
-
+    first = f"substring({{}}, 1, {isz})"
+    last = f"substring({{}}, (width - 1) * {isz} + 1, {isz})"
     # (slot, dx, dy, piece): receiver = me + (dx, dy); slot = position of
     # my piece relative to the receiver (reference D8 numbering)
     entries = [
-        (3, 0, 1, F.col("hs_s")),
-        (7, 0, -1, F.col("hs_n")),
-        (1, 1, 0, F.col("hs_e")),
-        (5, -1, 0, F.col("hs_w")),
-        (2, 1, 1, last("hs_s")),
-        (4, -1, 1, first("hs_s")),
-        (8, 1, -1, last("hs_n")),
-        (6, -1, -1, first("hs_n")),
+        (3, 0, 1, "hs_s"),
+        (7, 0, -1, "hs_n"),
+        (1, 1, 0, "hs_e"),
+        (5, -1, 0, "hs_w"),
+        (2, 1, 1, last.format("hs_s")),
+        (4, -1, 1, first.format("hs_s")),
+        (8, 1, -1, last.format("hs_n")),
+        (6, -1, -1, first.format("hs_n")),
     ]
-    pieces = F.array(*[
-        F.struct(
-            (F.col("tile_x") + dx).alias("tile_x"),
-            (F.col("tile_y") + dy).alias("tile_y"),
-            F.lit(slot).alias("slot"),
-            strip.alias("strip"),
-        )
-        for slot, dx, dy, strip in entries
-    ])
-    return (
-        df.select(F.explode(pieces).alias("p"))
-        .select("p.tile_x", "p.tile_y", "p.slot", "p.strip")
-        .where(
-            (F.col("tile_x") >= 0) & (F.col("tile_x") < ntx)
-            & (F.col("tile_y") >= 0) & (F.col("tile_y") < nty)
-        )
+    # one SQL expression: each F.col/F.lit/F.struct/alias call costs
+    # Py4J round trips (more with Spark's call-site capture); building
+    # this table piece by piece took over 1,100 per halo_join
+    pieces = ", ".join(
+        f"named_struct('tile_x', tile_x + {dx}, 'tile_y', tile_y + {dy}, "
+        f"'slot', {slot}, 'strip', {piece})"
+        for slot, dx, dy, piece in entries
+    )
+    return df.selectExpr(f"inline(array({pieces}))").where(
+        f"tile_x >= 0 AND tile_x < {meta.ntiles_x} "
+        f"AND tile_y >= 0 AND tile_y < {meta.ntiles_y}"
     )
 
 
@@ -519,7 +508,7 @@ def halo_join(tr: TiledRaster) -> DataFrame:
     """
     meta = tr.meta
     packed = _jvm_halo_strips(tr.df, meta).groupBy("tile_x", "tile_y").agg(
-        F.collect_list(F.struct("slot", "strip")).alias("halo"))
+        F.expr("collect_list(struct(slot, strip)) AS halo"))
     # strips ~= 2 rings of perimeter cells at 8B + struct overhead
     perim_bytes = (
         meta.ntiles_x * meta.ntiles_y * 2 * (meta.tile_w + meta.tile_h)

@@ -107,31 +107,17 @@ def run_job_decomposed(cpus: int, grid: int,
     scheduling/driver floor (driver-side solves, stage submit gaps,
     Python-worker startup)."""
     sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
-
     from richdem_spark.api import FillDepressions
+    from richdem_spark.session import get_spark
     from richdem_spark.webtext import geocode, rasterize_pages, synth_webtext
 
     evdir = tempfile.mkdtemp(prefix="sparkev_")
-    for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
-              "MKL_NUM_THREADS"):
-        os.environ.setdefault(v, "1")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"decompose_{cpus}")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "64"))
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.dir", evdir)
-        .getOrCreate()
-    )
+    spark = get_spark(app=f"decompose_{cpus}", master=f"local[{cpus}]",
+                      shuffle_partitions=cpus, extra_conf={
+                          "spark.eventLog.enabled": "true",
+                          "spark.eventLog.compress": "false",
+                          "spark.eventLog.dir": evdir,
+                      })
     spark.sparkContext.setLogLevel("ERROR")
 
     bounds = []          # (phase, start_ms, end_ms) in driver epoch ms

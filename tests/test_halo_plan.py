@@ -76,6 +76,27 @@ def test_halo_fallback_matches_broadcast_path(spark, monkeypatch):
     assert got == want
 
 
+def test_halo_join_py4j_budget(spark, monkeypatch):
+    """halo_join builds its plan in a bounded number of Py4J commands.
+    Each Column-API call is a round trip, and Spark's call-site capture
+    adds more; a per-piece F.col/F.lit/F.struct build took over 1,100."""
+    from py4j.clientserver import ClientServerConnection
+
+    tr = T.raster_from_array(spark, np.arange(144.0).reshape(12, 12),
+                             tile_w=4, tile_h=4)
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    T.halo_join(tr)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 100, len(sent)
+
+
 def test_bucketed_table_zero_exchange_tile_side(spark, monkeypatch):
     """write_raster_table -> read_raster_table: the bucketed scan feeds
     the (non-broadcast) halo join with NO exchange at all on the tile
