@@ -6,9 +6,10 @@ algorithm (Barnes 2017), re-derived Spark-first from
    kernels/d8.py) + per-cell in-tile exit computation (``FollowPath``,
    main.cpp:270-334, here vectorized pointer doubling).  Only the
    perimeter cells' records leave the tile — O(perimeter) rows.
-2. **Global solve** (driver): Kahn propagation over the cross-tile
-   perimeter graph (``DownstreamCell`` handoffs + in-tile transport
-   links, main.cpp:647-862) producing per-entry-cell inflow offsets.
+2. **Global solve** (ops/solve.py decides where it runs): Kahn
+   propagation over the cross-tile perimeter graph (``DownstreamCell``
+   handoffs + in-tile transport links, main.cpp:647-862) producing
+   per-entry-cell inflow offsets.
 3. **Round 2** (mapInPandas): offsets are injected as point-source
    weights and propagated along in-tile paths with the same vectorized
    kernel — the batched equivalent of ``FollowPathAdd``
@@ -25,7 +26,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -39,19 +39,7 @@ from ..constants import D8X, D8Y, FLOWDIR_NO_DATA
 from ..kernels.d8 import d8_flow_accum, exit_cell_of
 from ..tiles import (
     TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
-
-# graphs at most this big are solved on the driver; larger ones run
-# as a single-partition executor job (tests patch this down) — see
-# ops/fill.py for the placement math (driver-capacity bound, measured
-# 2x cheaper than the executor hop below it)
-import os as _os
-
-# env override wins; None -> derived from the session's driver heap at
-# call time (ops/solve.py:driver_solve_max)
-DRIVER_SOLVE_MAX_PERIM = (
-    int(_os.environ["SPARK_GRAFT_DRIVER_SOLVE_MAX"])
-    if "SPARK_GRAFT_DRIVER_SOLVE_MAX" in _os.environ else None
-)
+from .solve import perimeter_rows, solve_per_tile
 
 _R1_SCHEMA = StructType(
     [
@@ -387,11 +375,10 @@ def flow_accumulation_d8_from_elev(elev: TiledRaster) -> TiledRaster:
     from ..tiles import halo_join
 
     meta = elev.meta
-    spark = elev.df.sparkSession
     r1 = halo_join(elev).mapInPandas(
         _round1_from_elev(meta), _R1_SCHEMA
     ).persist()
-    return _finish_accumulation(r1, meta, spark)
+    return _finish_accumulation(r1, meta)
 
 
 def flow_accumulation_d8(
@@ -402,7 +389,6 @@ def flow_accumulation_d8(
     gives each cell's contribution (the reference's weights argument,
     pyRichDEM __init__.py:554-566); default 1 per data cell."""
     meta = dirs.meta
-    spark = dirs.df.sparkSession
 
     if weights is not None:
         wdf = weights.df.select(
@@ -412,105 +398,45 @@ def flow_accumulation_d8(
         r1 = src.mapInPandas(_round1("column"), _R1_SCHEMA).persist()
     else:
         r1 = dirs.df.mapInPandas(_round1("none"), _R1_SCHEMA).persist()
-    return _finish_accumulation(r1, meta, spark)
+    return _finish_accumulation(r1, meta)
 
 
-def _finish_accumulation(r1, meta: RasterMeta, spark) -> TiledRaster:
+_OFF_SCHEMA = StructType(
+    [
+        StructField("tile_x", IntegerType(), False),
+        StructField("tile_y", IntegerType(), False),
+        StructField("ox", ArrayType(IntegerType()), False),
+        StructField("oy", ArrayType(IntegerType()), False),
+        StructField("oval", ArrayType(DoubleType()), False),
+    ]
+)
 
-    off_schema = StructType(
-        [
-            StructField("tile_x", IntegerType(), False),
-            StructField("tile_y", IntegerType(), False),
-            StructField("ox", ArrayType(IntegerType()), False),
-            StructField("oy", ArrayType(IntegerType()), False),
-            StructField("oval", ArrayType(DoubleType()), False),
-        ]
-    )
-    perim_cols = ["tile_x", "tile_y", "width", "height",
-                  "px", "py", "pacc", "qx", "qy", "qdir", "pvalid"]
+# round-1 columns the global solve reads (tile blobs excluded)
+_PERIM_COLS = ["tile_x", "tile_y", "width", "height",
+               "px", "py", "pacc", "qx", "qy", "qdir", "pvalid"]
 
-    def offsets_to_rows(entry_offsets):
+
+def _finish_accumulation(r1, meta: RasterMeta) -> TiledRaster:
+
+    def solve(rows):
+        """Inflow offsets of every entry cell, grouped by tile."""
         return [
             (tx, ty,
              [int(k[0]) for k in d], [int(k[1]) for k in d],
              [float(v) for v in d.values()])
-            for (tx, ty), d in entry_offsets.items()
+            for (tx, ty), d in _solve_perimeter_graph(rows, meta).items()
         ]
 
-    # O(total perimeter) graph: driver solve below the threshold (lowest
-    # latency), single-partition executor job above it so the perimeter
-    # records and the offsets never touch the driver
-    perim_estimate = (
-        meta.ntiles_x * meta.ntiles_y * 2 * (meta.tile_w + meta.tile_h)
-    )
-    from .solve import driver_solve_max
-
-    off_map = None
-    if perim_estimate <= driver_solve_max(spark, DRIVER_SOLVE_MAX_PERIM):
-        # Arrow collect: the perimeter rows carry ~128 KB of packed
-        # strips per tile (134 MB at 1024 tiles); toPandas moves them
-        # in Arrow batches — interleaved reps measured ~0.4 s vs
-        # ~1.0 s for row-based collect(), and it skips the row-object
-        # churn on the driver heap
-        perim = list(r1.select(*perim_cols).toPandas()
-                     .itertuples(index=False))
-        off_rows = offsets_to_rows(_solve_perimeter_graph(perim, meta))
-        n_offsets = sum(len(r[2]) for r in off_rows)
-        if off_rows and n_offsets <= 10_000:
-            # small solve: offsets ride in the round-2 closure — no
-            # createDataFrame, no broadcast-exchange job, no join
-            off_map = {(r[0], r[1]): (r[2], r[3], r[4])
-                       for r in off_rows}
-            off_df = None
-        else:
-            off_df = (
-                spark.createDataFrame(off_rows, off_schema)
-                if off_rows else None
-            )
-    else:
-        def exec_solve(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from collections import namedtuple
-
-            PR = namedtuple("PR", perim_cols)
-            rows = []
-            for pdf in it:
-                rows.extend(
-                    PR(*t) for t in
-                    pdf[perim_cols].itertuples(index=False, name=None)
-                )
-            off_rows = offsets_to_rows(_solve_perimeter_graph(rows, meta))
-            if off_rows:
-                yield pd.DataFrame(off_rows, columns=[
-                    "tile_x", "tile_y", "ox", "oy", "oval"])
-
-        off_df = r1.select(*perim_cols).repartition(1).mapInPandas(
-            exec_solve, off_schema
-        ).persist()
-        if off_df.rdd.isEmpty():
-            off_df = None
-
-    if off_map is not None:
-        joined = r1           # offsets ride in the round-2 closure
-    elif off_df is not None:
-        joined = r1.join(F.broadcast(off_df), ["tile_x", "tile_y"], "left")
-    else:
-        joined = (
-            r1.withColumn("ox", F.lit(None).cast(ArrayType(IntegerType())))
-            .withColumn("oy", F.lit(None).cast(ArrayType(IntegerType())))
-            .withColumn("oval", F.lit(None).cast(ArrayType(DoubleType())))
-        )
+    joined, offsets_of = solve_per_tile(
+        r1, _PERIM_COLS, solve, _OFF_SCHEMA, perimeter_rows(meta))
 
     def round2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
             for r in pdf.itertuples():
                 acc = unpack(r.accum, r.height, r.width, "float64").copy()
-                if off_map is not None:
-                    ox, oy, oval = off_map.get(
-                        (int(r.tile_x), int(r.tile_y)), ((), (), ()))
-                else:
-                    ox, oy, oval = r.ox, r.oy, r.oval
-                if ox is not None and len(ox):
+                ox, oy, oval = offsets_of(r) or ((), (), ())
+                if len(ox):
                     d = unpack(r.dirs, r.height, r.width, "uint8")
                     inj = np.zeros((r.height, r.width))
                     for x, y, v in zip(ox, oy, oval):

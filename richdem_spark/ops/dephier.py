@@ -15,8 +15,8 @@ Waves (all O(perimeter + #leaves) communication):
 A. **Pointers** (halo_join + mapInPandas): per-tile steepest-descent /
    plateau pointers with *global* flat-index semantics; in-tile pointer
    doubling resolves each cell to (in-tile pit root | ocean | first
-   off-tile hop).  Border-cell routes + in-tile pit list go to the
-   driver; the driver path-compresses the hop chains
+   off-tile hop).  Border-cell routes + in-tile pit list go to one
+   global solve (ops/solve.py), which path-compresses the hop chains
    (cf. ``FollowPath``, programs/parallel_d8_accum/main.cpp:270-334 —
    the same pattern the accumulation op uses).
 B. **Relabel + outlet partials** (mapInPandas): cells relabel to their
@@ -78,6 +78,7 @@ from ..tiles import (
     tiles_from_state,
     unpack,
 )
+from .solve import perimeter_rows, solve_collect, solve_per_tile
 
 _BIG = np.iinfo(np.int64).max
 
@@ -391,11 +392,10 @@ def _min_outlets(parts):
     return best
 
 
-def _wave_b(meta: RasterMeta, topology: str):
+def _wave_b(meta: RasterMeta, topology: str, hops_of):
     """Relabel to global pit roots + in-tile outlets + border strips.
-    Hop resolutions arrive per tile as joined ``mkeys``/``mvals`` arrays
-    (each tile receives the resolved terminals of its neighbours' border
-    cells), so no O(perimeter) map is shipped in the closure."""
+    ``hops_of(row)`` gives each tile the resolved terminals of its
+    neighbours' border cells as ``(mkeys, mvals)`` arrays."""
     W = meta.width
     tw, th = meta.tile_w, meta.tile_h
     slots_f = (5, 6, 7, 8) if topology == TOPO_D8 else (5, 7)
@@ -407,12 +407,9 @@ def _wave_b(meta: RasterMeta, topology: str):
                 h, w = r.height, r.width
                 term = unpack(r.term, h, w, "int64").ravel()
                 elev = unpack(r.data, h, w, "float64")
-                keys = (np.array(list(r.mkeys), dtype=np.int64)
-                        if r.mkeys is not None
-                        else np.empty(0, dtype=np.int64))
-                vals = (np.array(list(r.mvals), dtype=np.int64)
-                        if r.mvals is not None
-                        else np.empty(0, dtype=np.int64))
+                mkeys, mvals = hops_of(r) or ((), ())
+                keys = np.array(list(mkeys), dtype=np.int64)
+                vals = np.array(list(mvals), dtype=np.int64)
                 # decode: ocean -> -1; root -> gidx; hop -> resolve
                 g, kind = _dec(term)
                 lab = np.where(term == _OCEAN_ENC, -1, g)
@@ -680,10 +677,10 @@ def depression_hierarchy(
         _A_SCHEMA,
     ).persist()
 
-    # ---- border-hop resolution (two-level: driver or executor job);
+    # ---- border-hop resolution (one global solve, ops/solve.py);
     # each resolved border terminal is delivered to the 8 neighbouring
     # tiles (hop targets always land in a neighbour's border ring), so
-    # wave B joins its slice instead of shipping an O(perimeter) map.
+    # wave B reads only its own slice of the result.
     ntx, nty = meta.ntiles_x, meta.ntiles_y
     tw, th = meta.tile_w, meta.tile_h
 
@@ -713,16 +710,11 @@ def depression_hierarchy(
         StructField("mkeys", ArrayType(LongType()), False),
         StructField("mvals", ArrayType(LongType()), False),
     ])
-    from .solve import two_level_solve
-
-    hops_df = two_level_solve(
-        a_df.select("tile_x", "tile_y", "bg", "bt"),
-        hop_solve, hop_schema,
-        est_rows=ntx * nty * 2 * (tw + th),
-    )
-
-    b_df = a_df.join(hops_df, ["tile_x", "tile_y"], "left") \
-        .mapInPandas(_wave_b(meta, topology), _B_SCHEMA).persist()
+    joined, hops_of = solve_per_tile(
+        a_df, ["tile_x", "tile_y", "bg", "bt"], hop_solve, hop_schema,
+        perimeter_rows(meta))
+    b_df = joined.mapInPandas(_wave_b(meta, topology, hops_of),
+                              _B_SCHEMA).persist()
 
     in_tile = b_df.select(
         F.explode(F.arrays_zip("oa", "ob", "oc", "oz")).alias("o")
@@ -740,7 +732,7 @@ def depression_hierarchy(
     )
 
     # leaf-root fragments (gidx, pit elev) join the same solve input —
-    # exploded executor-side, so on the two-level executor path neither
+    # exploded executor-side, so on executor placement neither
     # the O(perimeter) outlet pairs nor the fragment list ever hit the
     # driver raw; the driver only collects the solve's compact output
     # (dense fragment map + deps + outlet DB), which it must hold anyway
@@ -784,10 +776,9 @@ def depression_hierarchy(
     #   * target is the ocean   -> an ocean-level coastal flat: cells
     #     become OCEAN, as the reference's ocean flood would claim them.
     # Union-find with -1 (ocean) as an absorbing terminal; absorption
-    # edges strictly descend in pit elevation, hence terminate.  Runs
-    # through the two-level switch: driver below the bound, else a
-    # single-partition executor job whose COMPACT output (fragment map,
-    # leaf list, outlet DB) is what the driver collects.
+    # edges strictly descend in pit elevation, hence terminate.  On
+    # either placement the driver receives only the solve's COMPACT
+    # output (fragment map, leaf list, outlet DB).
     def frag_solve(rows):
         pit_elev_of: dict[int, float] = {}
         outs = []
@@ -879,16 +870,17 @@ def depression_hierarchy(
     ])
     n_roots = int(
         (a_df.agg(F.sum(F.length("rg"))).first()[0] or 0) // 8)
-    solved_rows = two_level_solve(
+    solved_rows = solve_collect(
         outlets_in.unionByName(roots_in), frag_solve, frag_out_schema,
-        est_rows=n_roots + ntx * nty * 2 * (tw + th),
-    ).collect()
+        est_rows=n_roots + perimeter_rows(meta),
+    )
 
     frag_pairs = sorted(
-        (int(r.k1), int(r.k2)) for r in solved_rows if r.kind == 0)
+        (int(k1), int(k2)) for kind, k1, k2, _, _ in solved_rows
+        if kind == 0)
     leaf_rows = sorted(
-        (int(r.k1), int(r.k2), float(r.z))
-        for r in solved_rows if r.kind == 1)
+        (int(k1), int(k2), float(z)) for kind, k1, k2, z, _ in solved_rows
+        if kind == 1)
 
     deps: list[Depression] = [Depression(
         pit_elev=-np.inf, pit_cell=NO_VALUE, dep_label=0
@@ -897,8 +889,8 @@ def depression_hierarchy(
         deps.append(Depression(pit_cell=g, pit_elev=pe, dep_label=lid))
 
     outlet_db: dict[tuple, tuple] = {
-        (int(r.k1), int(r.k2)): (int(r.c), float(r.z))
-        for r in solved_rows if r.kind == 2
+        (int(k1), int(k2)): (int(c), float(z))
+        for kind, k1, k2, z, c in solved_rows if kind == 2
     }
     merge_outlet_db(deps, outlet_db)
 

@@ -6,23 +6,21 @@ Execution plan (exactly the paper's O(perimeter) communication bound):
 
 1. **Round 1** (mapInPandas, embarrassingly parallel): per-tile
    watershed-labelled Priority-Flood -> filled blob + label blob +
-   in-tile spillover edges (kernels/fill.py:fill_tile_labels).
-2. **Seam join** (one O(perimeter) shuffle): each tile emits its four
-   border strips (labels + filled elevation) keyed by the canonical seam
-   id; ``groupBy(seam)`` pairs adjacent strips and emits cross-tile
-   label edges ``max(elev_a, elev_b)`` with the min saddle kept per pair
-   (``HandleEdge``/``HandleCorner``, main.cpp:344-398).
-3. **Global solve** (driver): aggregated Priority-Flood over the label
-   graph seeded from the ocean at -inf (main.cpp:498-545).  The graph is
+   in-tile spillover edges (kernels/fill.py:fill_tile_labels), plus
+   each tile's border strips (labels + filled elevation) and corners.
+2. **Global solve** (ops/solve.py decides where it runs): the label
+   graph is built from the perimeter rows alone — in-tile edges plus
+   ``max(elev_a, elev_b)`` across every facing strip pair and 4-tile
+   corner, min saddle kept per pair (``HandleEdge``/``HandleCorner``,
+   main.cpp:344-398) — and solved by an aggregated Priority-Flood
+   seeded from the ocean at -inf (main.cpp:498-545).  The graph is
    |labels|-sized — ~4·sqrt(cells/tile) per tile — vastly smaller than
    the raster.
-4. **Round 2** (one mapInPandas over round 1, on every tile): raise each
+3. **Round 2** (one mapInPandas over round 1, on every tile): raise each
    cell to ``max(filled, graph_elev[label])`` (main.cpp:315-330).  A
-   tile without water levels is repacked unchanged, so the output keeps
-   the input's partitioning.  Small level sets ride in the round-2
-   closure; larger ones are broadcast-joined on tile id.  If the solve
-   raises nothing (and ``epsilon`` is off) round 2 is skipped and the
-   round-1 grids are the output.
+   tile without water levels is repacked unchanged.  If a driver-placed
+   solve raises nothing (and ``epsilon`` is off) round 2 is skipped and
+   the round-1 grids are the output.
 """
 
 from __future__ import annotations
@@ -48,6 +46,7 @@ from ..constants import TOPO_D8
 from ..kernels.fill import fill_tile_labels, graph_priority_flood
 from ..tiles import (
     TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
+from .solve import perimeter_rows, solve_per_tile
 
 _R1_SCHEMA = StructType(
     [
@@ -84,30 +83,12 @@ _R1_SCHEMA = StructType(
     ]
 )
 
-# Graphs at most this big are solved on the driver; larger ones run as
-# a single-partition executor job (tests patch this down).  Placement
-# math, not feasibility: a perimeter cell carries ~100 B of strips +
-# edge rows, so 16 M cells ≈ 1.6 GB against the 24 GB driver — while
-# the executor path pays a repartition(1) shuffle of the same bytes
-# plus a single-threaded Arrow/Python hop, measured 2x the whole-job
-# cost at the 16384²/t512 boundary (BASELINE.md round-5 correction).
-# Above the limit the executor path is still the only O(perimeter)
-# placement that avoids the driver heap.
-import os as _os
-
-# env override wins; None -> derived from the session's driver heap at
-# call time (ops/solve.py:driver_solve_max — ADVICE r5: don't hard-code
-# the bench container's 24 GB capacity)
-DRIVER_SOLVE_MAX_PERIM = (
-    int(_os.environ["SPARK_GRAFT_DRIVER_SOLVE_MAX"])
-    if "SPARK_GRAFT_DRIVER_SOLVE_MAX" in _os.environ else None
-)
-
-_EDGE_SCHEMA = StructType(
+_LEVEL_SCHEMA = StructType(
     [
-        StructField("a", LongType(), False),
-        StructField("b", LongType(), False),
-        StructField("z", DoubleType(), False),
+        StructField("tile_x", IntegerType(), False),
+        StructField("tile_y", IntegerType(), False),
+        StructField("lvl_label", ArrayType(LongType()), False),
+        StructField("lvl_level", ArrayType(DoubleType()), False),
     ]
 )
 
@@ -198,8 +179,8 @@ def _reduce_edge_arrays(aa, bb, zz):
 
 
 def _strip_pair_edges(parts, lab_a, elv_a, lab_b, elv_b, offs):
-    """Label edges across one facing strip pair (the driver-path twin of
-    the ``run`` kernel above); appends (lo, hi, z) arrays to parts."""
+    """Label edges across one facing strip pair; appends (lo, hi, z)
+    arrays to parts."""
     la = np.frombuffer(lab_a, dtype=np.int64)
     lb = np.frombuffer(lab_b, dtype=np.int64)
     ea = np.frombuffer(elv_a, dtype=np.float64)
@@ -216,7 +197,7 @@ def _strip_pair_edges(parts, lab_a, elv_a, lab_b, elv_b, offs):
                           np.maximum(l1[neq], l2[neq]), z[neq]))
 
 
-# perimeter columns a driver-side edge build needs (tile blobs excluded)
+# round-1 columns the global solve reads (tile blobs excluded)
 _PERIM_COLS = [
     "tile_x", "tile_y", "edge_a", "edge_b", "edge_z",
     "lab_n", "lab_s", "lab_w", "lab_e",
@@ -226,15 +207,12 @@ _PERIM_COLS = [
 ]
 
 
-def _driver_edges(rows, topology: str):
-    """All label-graph edges from ONE collect of the round-1 perimeter
-    columns.  Below the solve threshold the graph is O(perimeter) and
-    already collected for the driver solve, so building the edges here
-    replaces four shuffle stages (in-tile explode, two strip joins, the
-    corner join, the (a,b)->min agg) with numpy over the same bytes —
-    at bench tile counts those stages were 3x the cost of round 1
-    itself.  Above the threshold the distributed edge pipeline runs
-    unchanged."""
+def _label_edges(rows, topology: str):
+    """All label-graph edges from the round-1 perimeter rows of every
+    tile: the in-tile spillover edges plus the cross-tile edges of each
+    facing strip pair and 4-tile corner (``HandleEdge``/``HandleCorner``,
+    main.cpp:344-398), numpy over the rows the global solve already
+    holds."""
     diag = topology == TOPO_D8
     offs = (-1, 0, 1) if diag else (0,)
     edges: list[tuple[int, int, float]] = []
@@ -272,102 +250,6 @@ def _driver_edges(rows, topology: str):
     return edges
 
 
-def _seam_edges_df(r1, meta: RasterMeta, topology: str):
-    """Cross-tile label edges, computed with zero per-seam Python
-    overhead: V/H seams are a strip JOIN (one row per seam) fed to an
-    Arrow-batched mapInPandas; 4-tile corner seams reduce to scalar
-    columns and stay entirely in JVM expressions
-    (``HandleEdge``/``HandleCorner``, main.cpp:344-398)."""
-    ntx, nty = meta.ntiles_x, meta.ntiles_y
-    tx = F.col("tile_x")
-    ty = F.col("tile_y")
-    diag = topology == TOPO_D8
-
-    # --- V and H seams: join the facing strips --------------------------
-    v_a = r1.where(tx + 1 < ntx).select(
-        tx.alias("sx"), ty.alias("sy"),
-        F.col("lab_e").alias("lab_a"), F.col("elv_e").alias("elv_a"),
-    )
-    v_b = r1.where(tx > 0).select(
-        (tx - 1).alias("sx"), ty.alias("sy"),
-        F.col("lab_w").alias("lab_b"), F.col("elv_w").alias("elv_b"),
-    )
-    h_a = r1.where(ty + 1 < nty).select(
-        tx.alias("sx"), ty.alias("sy"),
-        F.col("lab_s").alias("lab_a"), F.col("elv_s").alias("elv_a"),
-    )
-    h_b = r1.where(ty > 0).select(
-        tx.alias("sx"), (ty - 1).alias("sy"),
-        F.col("lab_n").alias("lab_b"), F.col("elv_n").alias("elv_b"),
-    )
-    pairs = v_a.join(v_b, ["sx", "sy"]).unionByName(
-        h_a.join(h_b, ["sx", "sy"])
-    ).select("lab_a", "elv_a", "lab_b", "elv_b")
-
-    offs = (-1, 0, 1) if diag else (0,)
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            lo_parts, hi_parts, z_parts = [], [], []
-            for r in pdf.itertuples():
-                la = np.frombuffer(r.lab_a, dtype=np.int64)
-                lb = np.frombuffer(r.lab_b, dtype=np.int64)
-                ea = np.frombuffer(r.elv_a, dtype=np.float64)
-                eb = np.frombuffer(r.elv_b, dtype=np.float64)
-                n = len(la)
-                for off in offs:
-                    lo, hi = max(0, -off), min(n, n - off)
-                    l1 = la[lo:hi]
-                    l2 = lb[lo + off : hi + off]
-                    z = np.maximum(ea[lo:hi], eb[lo + off : hi + off])
-                    neq = l1 != l2
-                    if neq.any():
-                        lo_parts.append(np.minimum(l1[neq], l2[neq]))
-                        hi_parts.append(np.maximum(l1[neq], l2[neq]))
-                        z_parts.append(z[neq])
-            if not lo_parts:
-                yield pd.DataFrame(
-                    {"a": pd.Series([], dtype="int64"),
-                     "b": pd.Series([], dtype="int64"),
-                     "z": pd.Series([], dtype="float64")})
-                continue
-            # vectorized (a,b)->min(z) reduction: lexsort + reduceat
-            aa, bb, zz = _reduce_edge_arrays(
-                np.concatenate(lo_parts), np.concatenate(hi_parts),
-                np.concatenate(z_parts))
-            yield pd.DataFrame({"a": aa, "b": bb, "z": zz})
-
-    strip_edges = pairs.mapInPandas(run, _EDGE_SCHEMA)
-
-    if not diag:
-        return strip_edges
-
-    # --- 4-tile corner seams: diagonal pairs, scalar JVM arithmetic -----
-    # BR corner of (sx,sy) vs TL corner of (sx+1,sy+1); BL of (sx+1,sy)
-    # vs TR of (sx,sy+1)
-    tl = r1.select(tx.alias("sx"), ty.alias("sy"),
-                   F.col("lab_se").alias("l1"), F.col("elv_se").alias("e1"))
-    br = r1.select((tx - 1).alias("sx"), (ty - 1).alias("sy"),
-                   F.col("lab_nw").alias("l2"), F.col("elv_nw").alias("e2"))
-    tr_ = r1.select((tx - 1).alias("sx"), ty.alias("sy"),
-                    F.col("lab_sw").alias("l1"),
-                    F.col("elv_sw").alias("e1"))
-    bl = r1.select(tx.alias("sx"), (ty - 1).alias("sy"),
-                   F.col("lab_ne").alias("l2"), F.col("elv_ne").alias("e2"))
-    corners = tl.join(br, ["sx", "sy"]).unionByName(
-        tr_.join(bl, ["sx", "sy"])
-    )
-    corner_edges = (
-        corners.where(F.col("l1") != F.col("l2"))
-        .select(
-            F.least("l1", "l2").alias("a"),
-            F.greatest("l1", "l2").alias("b"),
-            F.greatest("e1", "e2").alias("z"),
-        )
-    )
-    return strip_edges.unionByName(corner_edges)
-
-
 def fill_depressions(
     tr: TiledRaster, topology: str = TOPO_D8, epsilon: bool = False,
     metrics=None,
@@ -382,115 +264,30 @@ def fill_depressions(
     (see SURVEY.md §7.3).
     """
     meta = tr.meta
-    spark = tr.df.sparkSession
 
     r1 = tr.df.mapInPandas(_round1(meta, topology, metrics), _R1_SCHEMA).persist()
 
     stride = _label_stride(meta)
     ntx = meta.ntiles_x
-    lvl_schema = StructType(
-        [
-            StructField("tid", IntegerType(), False),
-            StructField("label", LongType(), False),
-            StructField("level", DoubleType(), False),
-        ]
-    )
-    # the graph is O(total perimeter); below the threshold the driver
-    # solves it (one collect, lowest latency), above it the solve runs
-    # as a single-partition executor job and the levels never touch the
-    # driver (the reference's own scaling concern,
-    # parallel_priority_flood/main.cpp:498-545 runs on the producer rank)
-    perim_estimate = (
-        meta.ntiles_x * meta.ntiles_y * 2 * (meta.tile_w + meta.tile_h)
-    )
-    from .solve import driver_solve_max
 
-    driver_solved = perim_estimate <= driver_solve_max(
-        spark, DRIVER_SOLVE_MAX_PERIM)
-    if driver_solved:
-        # Arrow collect (see ops/accum.py) — the strips dominate bytes
-        perim = list(r1.select(*_PERIM_COLS).toPandas()
-                     .itertuples(index=False))
-        graph_elev = graph_priority_flood(_driver_edges(perim, topology))
-        lvl_rows = [
-            (int((l - 2) // stride), int(l), float(z))
-            for l, z in graph_elev.items()
-            if l > 1 and z != -np.inf
-        ]
-    else:
-        in_tile_edges = r1.select(
-            F.explode(F.arrays_zip("edge_a", "edge_b", "edge_z")).alias("e")
-        ).select(
-            F.col("e.edge_a").alias("a"),
-            F.col("e.edge_b").alias("b"),
-            F.col("e.edge_z").alias("z"),
-        )
-        # JVM-side partial aggregation keeps the label graph minimal
-        edges_df = (
-            in_tile_edges.unionByName(_seam_edges_df(r1, meta, topology))
-            .groupBy("a", "b")
-            .agg(F.min("z").alias("z"))
-        )
+    def solve(rows):
+        """Water level of every raised label, grouped by owner tile."""
+        by_tile: dict[int, tuple[list, list]] = {}
+        for l, z in graph_priority_flood(_label_edges(rows, topology)).items():
+            if l > 1 and z != -np.inf:
+                labs, levs = by_tile.setdefault(int((l - 2) // stride),
+                                                ([], []))
+                labs.append(int(l))
+                levs.append(float(z))
+        return [(t % ntx, t // ntx, labs, levs)
+                for t, (labs, levs) in by_tile.items()]
 
-        def exec_solve(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..kernels.fill import graph_priority_flood as gpf
-
-            edges = []
-            for pdf in it:
-                edges.extend(zip(pdf["a"].tolist(), pdf["b"].tolist(),
-                                 pdf["z"].tolist()))
-            ge = gpf(edges)
-            rows = [
-                (int((l - 2) // stride), int(l), float(z))
-                for l, z in ge.items()
-                if l > 1 and z != -np.inf
-            ]
-            if rows:
-                yield pd.DataFrame(
-                    {"tid": [r[0] for r in rows],
-                     "label": [r[1] for r in rows],
-                     "level": [r[2] for r in rows]}
-                )
-
-        lvl_flat = edges_df.repartition(1).mapInPandas(
-            exec_solve, lvl_schema
-        ).persist()
-        if lvl_flat.rdd.isEmpty():
-            lvl_flat = None
-
-    lvl_struct = ArrayType(StructType([StructField("label", LongType()),
-                                       StructField("level", DoubleType())]))
-    # per-tile water levels reach round 2 one of two ways: small
-    # driver solves ride in the round-2 closure (a few KB pickled per
-    # task — no createDataFrame, no broadcast-exchange job, no join);
-    # large ones are broadcast-joined on tile id
-    lvl_map: dict[int, list] = {}
-    lvl_df = None
-    if driver_solved:
-        # the solve ran on the driver, so the per-tile level lists are
-        # already in hand: no pass over round 1 re-derives them
-        by_tid: dict[int, list] = {}
-        for tid_, lab_, lev_ in lvl_rows:
-            by_tid.setdefault(tid_, []).append(
-                {"label": lab_, "level": lev_})
-        if len(lvl_rows) <= 10_000:
-            lvl_map = by_tid
-        else:
-            lvl_df = spark.createDataFrame(
-                [(t, [(s["label"], s["level"]) for s in v])
-                 for t, v in by_tid.items()],
-                StructType([StructField("tid", IntegerType(), False),
-                            StructField("levels", lvl_struct)]))
-    elif lvl_flat is not None:
-        lvl_df = (
-            lvl_flat
-            .groupBy("tid")
-            .agg(F.collect_list(F.struct("label", "level")).alias("levels"))
-        )
+    joined, levels_of = solve_per_tile(
+        r1, _PERIM_COLS, solve, _LEVEL_SCHEMA, perimeter_rows(meta))
 
     new_meta = replace(meta, dtype="float64").with_history(
         f"fill_depressions(topology={topology}, epsilon={epsilon})")
-    if not epsilon and lvl_df is None and not lvl_map:
+    if not epsilon and levels_of.empty:
         # nothing to raise: round 1 packed the filled grid as float64,
         # with its border strips in elv_*; projected onto the tile
         # columns, that is the output
@@ -501,18 +298,10 @@ def fill_depressions(
             F.col("elv_w").alias("hs_w"), F.col("elv_e").alias("hs_e"),
         ), new_meta)
 
-    # round 2 runs on EVERY tile, as one mapInPandas over round 1, so the
-    # output keeps the input's partitioning: a tile with no levels is
-    # repacked unchanged (max with the -inf default is a no-op)
-    levels_col = lvl_df is not None
-    if levels_col:
-        joined = r1.withColumn(
-            "tid",
-            (F.col("tile_y") * F.lit(ntx) + F.col("tile_x")).cast("int"),
-        ).join(F.broadcast(lvl_df), "tid", "left")
-    else:
-        joined = r1
-
+    # round 2 runs on EVERY tile, as one mapInPandas, and a tile with no
+    # levels is repacked unchanged (max with the -inf default is a
+    # no-op); on driver placement it maps round 1 itself, so the output
+    # keeps the input's partitioning
     eps = bool(epsilon)
 
     def round2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -525,14 +314,10 @@ def fill_depressions(
                     r.data, r.height, r.width, "float64"
                 ).copy()
                 labels = unpack(r.labels, r.height, r.width, "int64")
-                levels = (
-                    r.levels if levels_col
-                    else lvl_map.get(int(r.tile_y) * ntx + int(r.tile_x))
-                )
-                if levels is not None and len(levels):
-                    lk = np.array([int(s["label"]) for s in levels],
-                                  dtype=np.int64)
-                    lv = np.array([float(s["level"]) for s in levels])
+                levels = levels_of(r)
+                if levels is not None and len(levels[0]):
+                    lk = np.asarray(levels[0], dtype=np.int64)
+                    lv = np.asarray(levels[1], dtype=np.float64)
                     order = np.argsort(lk)
                     lk, lv = lk[order], lv[order]
                     # vectorized label -> water-level map; labels absent

@@ -4,7 +4,8 @@ The single-grid algorithm (kernels/flats.py) re-expressed as tile rounds:
 
 1. **Label flats globally**: per-tile connected components of
    equal-elevation candidate cells (vectorized CCL on the halo-padded
-   tile), seam union-find on the driver merges components across tiles;
+   tile), a seam union-find in one global solve merges components
+   across tiles;
    a flat is *drainable* iff its global component contains a low-edge
    cell anywhere on the DEM.
 2. **Away/towards gradients**: the reference's level-synchronous BFS
@@ -31,10 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -51,6 +50,7 @@ from ..tiles import (
     tile_frame,
     unpack,
 )
+from .solve import perimeter_rows, solve_per_tile
 
 _IMAX = np.iinfo(np.int64).max
 
@@ -322,7 +322,7 @@ def resolve_flats_distributed(
 
     st = e_halo.mapInPandas(phase1, _STATE_SCHEMA).persist()
 
-    # ---- seam union-find (two-level: driver or executor job) ------------
+    # ---- seam union-find (one global solve, ops/solve.py) ---------------
     def alias_solve(rows):
         by_key = {(r.tile_x, r.tile_y): r for r in rows}
 
@@ -400,16 +400,10 @@ def resolve_flats_distributed(
         StructField("olds", ArrayType(LongType()), False),
         StructField("news", ArrayType(LongType()), False),
     ])
-    from .solve import two_level_solve
-
-    perim_est = meta.ntiles_x * meta.ntiles_y * 2 * (
-        meta.tile_w + meta.tile_h)
-    alias_df = two_level_solve(
-        st.select("tile_x", "tile_y", "lab_n", "lab_s", "lab_w",
-                  "lab_e", "elv_n", "elv_s", "elv_w", "elv_e",
-                  "lid", "lid_low"),
-        alias_solve, alias_schema, est_rows=perim_est,
-    )
+    joined, alias_of = solve_per_tile(
+        st, ["tile_x", "tile_y", "lab_n", "lab_s", "lab_w", "lab_e",
+             "elv_n", "elv_s", "elv_w", "elv_e", "lid", "lid_low"],
+        alias_solve, alias_schema, perimeter_rows(meta))
 
     def relabel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -417,8 +411,8 @@ def resolve_flats_distributed(
             for r in pdf.itertuples():
                 labels = unpack(r.labels, r.height, r.width,
                                 "int64").copy()
-                amap = (dict(zip(list(r.olds), list(r.news)))
-                        if r.olds is not None else {})
+                alias = alias_of(r)
+                amap = dict(zip(*alias)) if alias else {}
                 # vectorized remap (a per-label boolean mask pass is
                 # O(#labels x cells) — quadratic on label-rich tiles)
                 uniq, inv = np.unique(labels, return_inverse=True)
@@ -443,8 +437,7 @@ def resolve_flats_distributed(
                         out[f.name].append(getattr(r, f.name))
             yield pd.DataFrame(out)
 
-    st2 = st.join(alias_df, ["tile_x", "tile_y"], "left") \
-        .mapInPandas(relabel, _STATE_SCHEMA).persist()
+    st2 = joined.mapInPandas(relabel, _STATE_SCHEMA).persist()
     import time as _time
 
     _t0 = _time.perf_counter()

@@ -37,8 +37,8 @@ NoData is treated as an ordinary (very negative) elevation, exactly as
 the reference assumes (Barnes2014.hpp:833-835).
 
 Communication: one distributed fill, two 1-ring halo exchanges, one
-O(perimeter) component solve (two-level), one decision join.  Tile
-interiors never shuffle.
+O(perimeter) component solve (ops/solve.py) read by the final per-tile
+pass.  Tile interiors never shuffle.
 """
 
 from __future__ import annotations
@@ -68,6 +68,7 @@ from ..tiles import (
     tile_frame,
     unpack,
 )
+from .solve import perimeter_rows, solve_per_tile
 
 _MD_SCHEMA = StructType([
     StructField("tile_x", IntegerType(), False),
@@ -98,7 +99,7 @@ def fill_depressions_max_dep(
     meta = tr.meta
     conn = 8 if topology == TOPO_D8 else 4
     slots = range(1, 9) if conn == 8 else (1, 3, 5, 7)
-    ntx, nty = meta.ntiles_x, meta.ntiles_y
+    ntx = meta.ntiles_x
     tw, th = meta.tile_w, meta.tile_h
     W = meta.width
     stride = tw * th + 2
@@ -246,14 +247,10 @@ def fill_depressions_max_dep(
         StructField("tile_y", IntegerType(), False),
         StructField("sel", ArrayType(LongType()), False),
     ])
-    from .solve import two_level_solve
-
-    sel_df = two_level_solve(
-        st.select("tile_x", "tile_y", "cmp_n", "cmp_s", "cmp_w",
-                  "cmp_e", "ids", "szs", "tze", "tzg"),
-        solve, sel_schema,
-        est_rows=ntx * nty * 2 * (tw + th),
-    )
+    joined, sel_of = solve_per_tile(
+        st, ["tile_x", "tile_y", "cmp_n", "cmp_s", "cmp_w", "cmp_e",
+             "ids", "szs", "tze", "tzg"],
+        solve, sel_schema, perimeter_rows(meta))
 
     nodata = meta.nodata
 
@@ -264,9 +261,9 @@ def fill_depressions_max_dep(
                 h, w = r.height, r.width
                 a = unpack(r.dem, h, w, "float64").copy()
                 comp = unpack(r.comp, h, w, "int64")
-                sel = (np.array(list(r.sel), dtype=np.int64)
-                       if r.sel is not None else
-                       np.empty(0, dtype=np.int64))
+                picked = sel_of(r)
+                sel = np.array(list(picked[0]) if picked else [],
+                               dtype=np.int64)
                 m = comp > 0
                 if m.any() and sel.size:
                     pos = np.searchsorted(sel, comp[m])
@@ -278,8 +275,7 @@ def fill_depressions_max_dep(
                 out.append((r.tile_x, r.tile_y, a, nodata))
             yield tile_frame(out)
 
-    out_df = st.join(sel_df, ["tile_x", "tile_y"], "left") \
-        .mapInPandas(wave2, TILE_SCHEMA)
+    out_df = joined.mapInPandas(wave2, TILE_SCHEMA)
     new_meta = replace(meta, dtype="float64").with_history(
         f"fill_depressions_max_dep({max_dep_size})")
     return TiledRaster(out_df, new_meta)

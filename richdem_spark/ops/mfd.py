@@ -342,17 +342,13 @@ def flow_accumulation_mfd(
         .localCheckpoint(eager=True)
 
     import gc as _gc
-    import os as _os
 
-    _dbg = _os.environ.get("RICHDEM_SPARK_DEBUG_MFD")
     inflight: list[int] = []
     rounds_done = 0
     for _round in range(max_rounds):
         # loop-control scalar only — injection/credit rows never touch
         # the driver: exploded, re-keyed by owner tile, shuffled back
         n_out = state.agg(F.sum(F.size("ogx")).alias("n")).first()["n"]
-        if _dbg:
-            print(f"MFDDBG round={_round} n_out={n_out}", flush=True)
         if n_out:
             inflight.append(int(n_out))
         if not n_out:

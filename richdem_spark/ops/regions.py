@@ -3,12 +3,12 @@
 * ``bucket_fill_from_edges`` — conditional flood fill from the grid
   edges (misc/misc_methods.hpp:258-334) as a two-wave connected-label
   exchange: per-tile CCL of ``check_value`` cells, O(perimeter) seam
-  pairs union-found on the driver, per-tile rewrite of seeded
+  pairs union-found in one global solve, per-tile rewrite of seeded
   components.  The Barnes-2016 communication shape, applied to a
   boolean flood.
 * ``upslope_cells`` — cells whose D8 flow path crosses a line segment
   (methods/d8_methods.hpp:167-236), as per-tile OR-flag pointer
-  doubling (does my in-tile path hit the line?) + driver resolution of
+  doubling (does my in-tile path hit the line?) + global resolution of
   the cross-tile exit chains + per-tile relabel — the watershed-labels
   machinery with a boolean payload.
 """
@@ -19,7 +19,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -35,6 +34,7 @@ from ..kernels.d8 import exit_cell_of
 from ..kernels.misc import _bresenham
 from ..tiles import (
     TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
+from .solve import perimeter_rows, solve_per_tile
 
 def seam_union_find(rows, topology):
     """Union-find over per-tile border component strips.  ``rows`` carry
@@ -179,21 +179,15 @@ def bucket_fill_from_edges(
             for owner, ids in per_tile.items()
         ]
 
-    from pyspark.sql.types import ArrayType as _AT, LongType as _LT
-
     seed_schema = StructType([
         StructField("tile_x", IntegerType(), False),
         StructField("tile_y", IntegerType(), False),
-        StructField("seeded", _AT(_LT()), False),
+        StructField("seeded", ArrayType(LongType()), False),
     ])
-    from .solve import two_level_solve
-
-    seeded_df = two_level_solve(
-        st.select("tile_x", "tile_y", "edge_seeded",
-                  "cmp_n", "cmp_s", "cmp_w", "cmp_e"),
-        solve, seed_schema,
-        est_rows=ntx * nty * 2 * (meta.tile_w + meta.tile_h),
-    )
+    joined, seeded_of = solve_per_tile(
+        st, ["tile_x", "tile_y", "edge_seeded",
+             "cmp_n", "cmp_s", "cmp_w", "cmp_e"],
+        solve, seed_schema, perimeter_rows(meta))
 
     src_nodata = meta.nodata
 
@@ -204,9 +198,9 @@ def bucket_fill_from_edges(
                 dtype = r.dt.decode()
                 a = unpack(r.data, r.height, r.width, dtype).copy()
                 comp = unpack(r.comp, r.height, r.width, "int64")
-                sd = (np.array(list(r.seeded), dtype=np.int64)
-                      if r.seeded is not None else
-                      np.empty(0, dtype=np.int64))
+                seeded = seeded_of(r)
+                sd = np.array(list(seeded[0]) if seeded else [],
+                              dtype=np.int64)
                 m = comp > 0
                 if m.any() and sd.size:
                     pos = np.searchsorted(sd, comp[m])
@@ -220,8 +214,7 @@ def bucket_fill_from_edges(
                 out.append((r.tile_x, r.tile_y, a, src_nodata))
             yield tile_frame(out)
 
-    out_df = st.join(seeded_df, ["tile_x", "tile_y"], "left") \
-        .mapInPandas(wave2, TILE_SCHEMA)
+    out_df = joined.mapInPandas(wave2, TILE_SCHEMA)
     return TiledRaster(
         out_df,
         meta.with_history(
@@ -404,15 +397,9 @@ def upslope_cells(
         StructField("hx", ArrayType(IntegerType()), False),
         StructField("hy", ArrayType(IntegerType()), False),
     ])
-    from .solve import two_level_solve
-
-    hot_df = two_level_solve(
-        st.select("tile_x", "tile_y",
-                  "px", "py", "phit", "qx", "qy", "qdir"),
-        solve, schema2,
-        est_rows=meta.ntiles_x * meta.ntiles_y * 2 * (tw + th),
-    )
-    joined = st.join(hot_df, ["tile_x", "tile_y"], "left")
+    joined, hot_of = solve_per_tile(
+        st, ["tile_x", "tile_y", "px", "py", "phit", "qx", "qy", "qdir"],
+        solve, schema2, perimeter_rows(meta))
 
     def wave2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -423,9 +410,10 @@ def upslope_cells(
                 fl = unpack(r.flag, h, w, "uint8").ravel().astype(bool)
                 ex = unpack(r.exits, h, w, "int64").ravel()
                 up = fl.copy()
-                if r.hx is not None and len(r.hx):
+                hot_exits = hot_of(r)
+                if hot_exits is not None and len(hot_exits[0]):
                     hot = np.zeros(h * w, dtype=bool)
-                    for xx, yy in zip(r.hx, r.hy):
+                    for xx, yy in zip(*hot_exits):
                         hot[yy * w + xx] = True
                     # cells whose in-tile path ends at a hot exit are
                     # upslope through the cross-tile continuation

@@ -1,12 +1,24 @@
-"""Shared two-level global-solve switch.
+"""The one global solve between the two rounds of a tiled operator.
 
-Every two-round tiled operator has a tiny global solve over O(perimeter)
-seam rows (label graphs, route chains, union-finds) — the reference's
-producer rank (programs/parallel_priority_flood/main.cpp:401-547).  The
-driver handles it comfortably up to a bound; above the bound the SAME
-solve runs as a single-partition executor job so the driver never
-materializes O(perimeter) rows (the switch ops/fill.py:330-370 and
-ops/accum.py:432-463 introduced, generalized here for every operator).
+Every two-round operator has a tiny global solve over O(perimeter) seam
+rows (label graphs, route chains, union-finds) — the reference's
+producer rank (programs/parallel_priority_flood/main.cpp:498-545).  This
+module alone decides where that solve runs and how its result reaches
+round 2:
+
+* **Placement.** The driver solves when the estimated row count is
+  within :func:`driver_solve_max`, a bound derived from the driver
+  JVM's heap; above it the solve runs in a single-partition executor
+  job, so the driver never holds O(perimeter) rows.
+* **Input.** ``solve_fn`` gets the same Arrow-collected pandas rows
+  (attribute-accessible namedtuples) on both placements:
+  ``toPandas()`` on the driver, ``repartition(1).mapInPandas`` on an
+  executor.
+* **Result.** A driver result rides in the round-2 closure at any size
+  (PySpark broadcasts a pickled command over 1 MB by itself).  An
+  executor result reaches round 2 by a plain left join on
+  ``(tile_x, tile_y)``; adaptive execution decides whether to broadcast
+  it.
 """
 
 from __future__ import annotations
@@ -16,77 +28,35 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-# driver-capacity placement bound: env override wins; otherwise derived
-# from the session's actual driver heap at call time (ADVICE r5: the old
-# hard-coded 16 M was tuned to this container's 24 GB driver and would
-# OOM a typical 1-4 GB production driver in the 2-16 M perimeter range)
-import os as _os
-
-DRIVER_SOLVE_MAX_ROWS = (
-    int(_os.environ["SPARK_GRAFT_DRIVER_SOLVE_MAX"])
-    if "SPARK_GRAFT_DRIVER_SOLVE_MAX" in _os.environ else None
-)
+# Placement hook: None derives the bound from the driver heap; tests set
+# 0 to force executor placement.
+DRIVER_SOLVE_MAX_ROWS: int | None = None
 
 
-def _mem_bytes(s: str) -> int:
-    """Parse a Spark memory string: accepts k/m/g/t and kb/mb/gb/tb
-    suffixes (JavaUtils.byteStringAs does both); a unitless value is
-    MiB, matching how Spark reads driver/executor memory confs."""
-    s = str(s).strip().lower()
-    units = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
-    if s.endswith("b"):
-        s2 = s[:-1]
-        if s2 and s2[-1] in units:
-            return int(float(s2[:-1]) * units[s2[-1]])
-        return int(float(s2))          # plain bytes: "512b"
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    return int(float(s) * 2**20)       # unitless memory conf = MiB
+def driver_solve_max(spark) -> int:
+    """Rows the driver may solve: ~100 B of strip and edge payload per
+    perimeter row, held to ~1/15 of the driver JVM's max heap, never
+    below 1 M rows."""
+    if DRIVER_SOLVE_MAX_ROWS is not None:
+        return DRIVER_SOLVE_MAX_ROWS
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    return max(1_000_000, heap // 1500)
 
 
-def derived_driver_solve_max(spark) -> int:
-    """Perimeter-row budget for the driver-side solve: ~100 B of strip
-    and edge payload per perimeter cell, held to ~1/15 of the driver
-    heap — ~17 M rows on this sandbox's 24 GB driver (matching the
-    measured round-5 bound), ~1.4 M on a 2 GB production default."""
-    try:
-        mem = spark.conf.get("spark.driver.memory", None)
-    except Exception:
-        mem = None
-    if not mem:
-        mem = "2g"
-    return max(1_000_000, _mem_bytes(mem) // 1500)
+def perimeter_rows(meta) -> int:
+    """Perimeter cells of every tile: the row estimate of a seam solve."""
+    return meta.ntiles_x * meta.ntiles_y * 2 * (meta.tile_w + meta.tile_h)
 
 
-def driver_solve_max(spark, override) -> int:
-    """Resolve the bound: explicit/env override (including a test's
-    patched 0) wins, else the heap-derived default."""
-    return override if override is not None \
-        else derived_driver_solve_max(spark)
+def _on_driver(df: DataFrame, est_rows: int) -> bool:
+    return est_rows <= driver_solve_max(df.sparkSession)
 
 
-def two_level_solve(
-    df: DataFrame,
-    solve_fn: Callable[[list], list[tuple]],
-    out_schema,
-    est_rows: int,
-    driver_max_rows: int | None = None,
-) -> DataFrame:
-    """Run ``solve_fn(rows) -> list[tuple]`` over the collected rows of
-    ``df`` — on the driver when ``est_rows`` is small, else inside a
-    single-partition executor job.  Rows arrive as attribute-accessible
-    namedtuples either way; the result comes back as a DataFrame with
-    ``out_schema``.
+def _driver_rows(df: DataFrame) -> list:
+    return list(df.toPandas().itertuples(index=False))
 
-    ``driver_max_rows`` defaults to the module constant at CALL time so
-    tests can force the executor path by patching it."""
-    spark = df.sparkSession
-    if driver_max_rows is None:
-        driver_max_rows = driver_solve_max(spark, DRIVER_SOLVE_MAX_ROWS)
-    if est_rows <= driver_max_rows:
-        out = solve_fn(df.collect())
-        return spark.createDataFrame(out or [], out_schema)
 
+def _executor_solve(df: DataFrame, solve_fn, out_schema) -> DataFrame:
     cols = [f.name for f in out_schema.fields]
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -98,3 +68,64 @@ def two_level_solve(
             yield pd.DataFrame(out, columns=cols)
 
     return df.repartition(1).mapInPandas(run, out_schema)
+
+
+class TileResult:
+    """Round 2's view of a per-tile solve result: called with a round-2
+    row, it returns that tile's result values (the ``out_schema`` fields
+    after ``tile_x, tile_y``), or None when the solve gave the tile
+    nothing."""
+
+    def __init__(self, names: list[str], table: dict | None = None):
+        self.names = names
+        self.table = table       # driver placement: {(tx, ty): values}
+
+    @property
+    def empty(self) -> bool:
+        """True only when the result is known, without a job, to be
+        empty (a driver-placed solve that returned no rows)."""
+        return self.table == {}
+
+    def __call__(self, r):
+        if self.table is not None:
+            return self.table.get((int(r.tile_x), int(r.tile_y)))
+        v = tuple(getattr(r, n) for n in self.names)
+        return None if v[0] is None else v
+
+
+def solve_per_tile(
+    r1: DataFrame,
+    cols: list[str],
+    solve_fn: Callable[[list], list[tuple]],
+    out_schema,
+    est_rows: int,
+) -> tuple[DataFrame, TileResult]:
+    """Run ``solve_fn(rows) -> [(tile_x, tile_y, *values)]`` over the
+    ``cols`` of round 1 and hand the result to round 2.
+
+    Returns ``(frame, result)``: round 2 maps over ``frame`` (round 1
+    itself, or round 1 left-joined with the executor-placed result) and
+    calls ``result(row)`` for the row's tile values.  At most one result
+    row per tile."""
+    names = [f.name for f in out_schema.fields[2:]]
+    df = r1.select(*cols)
+    if _on_driver(df, est_rows):
+        table = {(int(t[0]), int(t[1])): tuple(t[2:])
+                 for t in solve_fn(_driver_rows(df))}
+        return r1, TileResult(names, table)
+    res = _executor_solve(df, solve_fn, out_schema)
+    return r1.join(res, ["tile_x", "tile_y"], "left"), TileResult(names)
+
+
+def solve_collect(
+    df: DataFrame,
+    solve_fn: Callable[[list], list[tuple]],
+    out_schema,
+    est_rows: int,
+) -> list[tuple]:
+    """Run ``solve_fn`` over the rows of ``df`` and return its result
+    rows on the driver, for a result the driver must hold anyway."""
+    if _on_driver(df, est_rows):
+        return list(solve_fn(_driver_rows(df)))
+    return [tuple(r) for r in _executor_solve(df, solve_fn,
+                                              out_schema).collect()]

@@ -10,8 +10,9 @@ draining to a common edge point" semantics (label *values* are outlet
 cell ids rather than flood-arrival order).
 
 Two rounds, O(perimeter) communication: per-tile ``exit_cell_of`` pointer
-compression; the driver resolves the cross-tile exit-hop chains with path
-compression; per-tile relabel joins the resolved terminals back.
+compression; one global solve (ops/solve.py) resolves the cross-tile
+exit-hop chains with path compression; the per-tile relabel reads the
+resolved terminals back.
 """
 
 from __future__ import annotations
@@ -20,14 +21,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -37,6 +35,7 @@ from ..kernels.d8 import exit_cell_of
 from ..tiles import (
     TILE_SCHEMA, RasterMeta, TiledRaster, pack, tile_frame, unpack)
 from .accum import _perimeter_indices
+from .solve import perimeter_rows, solve_per_tile
 
 _R1_SCHEMA = StructType(
     [
@@ -176,17 +175,9 @@ def watershed_labels(dirs: TiledRaster) -> TiledRaster:
         StructField("ey", ArrayType(IntegerType()), False),
         StructField("eterm", ArrayType(LongType()), False),
     ])
-    from .solve import two_level_solve
-
-    routes_df = two_level_solve(
-        r1.select("tile_x", "tile_y",
-                  "px", "py", "qx", "qy", "qdir", "pvalid"),
-        solve, schema,
-        est_rows=meta.ntiles_x * meta.ntiles_y * 2 * (tw + th),
-    )
-    # AQE broadcasts the (tiny at sandbox scale) route table at runtime;
-    # no forced hint so the executor-solve path stays shuffle-safe
-    joined = r1.join(routes_df, ["tile_x", "tile_y"], "left")
+    joined, routes_of = solve_per_tile(
+        r1, ["tile_x", "tile_y", "px", "py", "qx", "qy", "qdir", "pvalid"],
+        solve, schema, perimeter_rows(meta))
 
     def round2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -203,12 +194,14 @@ def watershed_labels(dirs: TiledRaster) -> TiledRaster:
                 terms = ((r.tile_y * th + qy) * W
                          + (r.tile_x * tw + qx)).astype(np.int64)
                 # overwrite where the exit continues into another tile
-                if r.ex is not None and len(r.ex):
+                routes = routes_of(r)
+                if routes is not None and len(routes[0]):
+                    rx, ry, rterm = routes
                     keys = np.array(
-                        [yy * w + xx for xx, yy in zip(r.ex, r.ey)],
+                        [yy * w + xx for xx, yy in zip(rx, ry)],
                         dtype=np.int64,
                     )
-                    vals = np.array(list(r.eterm), dtype=np.int64)
+                    vals = np.array(list(rterm), dtype=np.int64)
                     order = np.argsort(keys)
                     keys, vals = keys[order], vals[order]
                     pos = np.searchsorted(keys, exf)

@@ -213,8 +213,7 @@ def test_multi_tile_d4_epsilon_drainage(spark):
 def test_executor_side_graph_solves(spark, monkeypatch):
     """Forcing the off-driver (single-partition executor) solve path must
     give identical fill and accumulation results."""
-    import richdem_spark.ops.accum as accum_mod
-    import richdem_spark.ops.fill as fill_mod
+    import richdem_spark.ops.solve as solve_mod
     from richdem_spark.api import FillDepressions, FlowAccumulation
     from richdem_spark.tiles import raster_from_array
 
@@ -224,8 +223,7 @@ def test_executor_side_graph_solves(spark, monkeypatch):
     golden_fill = FillDepressions(tr).to_array()
     golden_acc = FlowAccumulation(
         FillDepressions(tr), "D8").to_array()
-    monkeypatch.setattr(fill_mod, "DRIVER_SOLVE_MAX_PERIM", 0)
-    monkeypatch.setattr(accum_mod, "DRIVER_SOLVE_MAX_PERIM", 0)
+    monkeypatch.setattr(solve_mod, "DRIVER_SOLVE_MAX_ROWS", 0)
     got_fill = FillDepressions(tr).to_array()
     assert np.array_equal(got_fill, golden_fill)
     got_acc = FlowAccumulation(FillDepressions(tr), "D8").to_array()
@@ -275,16 +273,22 @@ def test_convergence_telemetry(spark):
     assert m2["carve_live_per_round"][-1] == 0
 
 
-def test_driver_edges_equal_distributed_edges(spark):
-    """The driver-side label-graph build (fill's below-threshold fast
-    path) must produce exactly the distributed edge pipeline's
-    (a, b) -> min(z) graph on random DEMs, ragged tilings, and NoData
-    holes."""
-    import numpy as np
-    from pyspark.sql import functions as F
+def _reduce_edges(edges):
+    """(a, b) -> min(z) over undirected label pairs."""
+    red = {}
+    for a, b, z in edges:
+        k = (min(int(a), int(b)), max(int(a), int(b)))
+        red[k] = min(red.get(k, np.inf), float(z))
+    return red
 
+
+def test_label_edges_match_brute_force(spark):
+    """Fill's label graph (``_label_edges`` over the round-1 perimeter
+    rows) must equal a brute-force one: round 1's in-tile edges plus
+    every cross-tile 8-neighbour pair with different labels, at the
+    higher filled elevation of the pair, reduced to (a, b) -> min(z) —
+    on random DEMs, ragged tilings, and NoData holes."""
     import richdem_spark.ops.fill as fm
-    from richdem_spark.tiles import raster_from_array
 
     rng = np.random.default_rng(21)
     for trial, (h, w, tw, th, nd) in enumerate([
@@ -298,27 +302,150 @@ def test_driver_edges_equal_distributed_edges(spark):
         tr = raster_from_array(spark, dem, tw, th, nodata=nd)
         r1 = tr.df.mapInPandas(
             fm._round1(tr.meta, "D8", None), fm._R1_SCHEMA).persist()
+        perim = list(r1.select(*fm._PERIM_COLS).toPandas()
+                     .itertuples(index=False))
+        got = _reduce_edges(fm._label_edges(perim, "D8"))
 
-        drv = fm._driver_edges(r1.select(*fm._PERIM_COLS).collect(),
-                               "D8")
-        # reduce driver edges to (a,b)->min(z) for comparison
-        red = {}
-        for a, b, z in drv:
-            k = (min(a, b), max(a, b))
-            red[k] = min(red.get(k, np.inf), z)
-
-        in_tile = r1.select(
-            F.explode(F.arrays_zip("edge_a", "edge_b", "edge_z"))
-            .alias("e")
-        ).select(F.col("e.edge_a").alias("a"),
-                 F.col("e.edge_b").alias("b"),
-                 F.col("e.edge_z").alias("z"))
-        dist = (in_tile.unionByName(
-                    fm._seam_edges_df(r1, tr.meta, "D8"))
-                .groupBy("a", "b").agg(F.min("z").alias("z"))).collect()
-        dist_red = {}
-        for r in dist:
-            k = (min(r.a, r.b), max(r.a, r.b))
-            dist_red[k] = min(dist_red.get(k, np.inf), r.z)
-        assert red == dist_red, f"trial {trial}: edge graphs differ"
+        labels = np.zeros((h, w), dtype=np.int64)
+        filled = np.zeros((h, w))
+        tile = np.zeros((h, w), dtype=np.int64)
+        edges = []
+        for r in r1.collect():
+            ys = slice(r.tile_y * th, r.tile_y * th + r.height)
+            xs = slice(r.tile_x * tw, r.tile_x * tw + r.width)
+            labels[ys, xs] = np.frombuffer(r.labels, np.int64).reshape(
+                r.height, r.width)
+            filled[ys, xs] = np.frombuffer(r.data, np.float64).reshape(
+                r.height, r.width)
+            tile[ys, xs] = r.tile_y * tr.meta.ntiles_x + r.tile_x
+            edges.extend(zip(r.edge_a, r.edge_b, r.edge_z))
+        for dy, dx in ((0, 1), (1, -1), (1, 0), (1, 1)):
+            for y in range(h - dy):
+                for x in range(max(0, -dx), min(w, w - dx)):
+                    y2, x2 = y + dy, x + dx
+                    if (tile[y, x] != tile[y2, x2]
+                            and labels[y, x] != labels[y2, x2]):
+                        edges.append((labels[y, x], labels[y2, x2],
+                                      max(filled[y, x], filled[y2, x2])))
+        assert got == _reduce_edges(edges), f"trial {trial}"
         r1.unpersist()
+
+
+def _count_solve_entries(monkeypatch, *mods):
+    """Wrap each op module's per-tile solve so a driver-placed solve
+    records how many entries (the first result array, summed over
+    tiles) it returns."""
+    counts = {}
+    for mod in mods:
+        def counting(r1, cols, solve_fn, schema, est,
+                     _name=mod.__name__, _orig=mod.solve_per_tile):
+            def fn(rows):
+                out = solve_fn(rows)
+                counts[_name] = sum(len(t[2]) for t in out)
+                return out
+            return _orig(r1, cols, fn, schema, est)
+        monkeypatch.setattr(mod, "solve_per_tile", counting)
+    return counts
+
+
+def test_large_solves_match_kernels_on_both_placements(spark, monkeypatch):
+    """Fill and D8 accumulation solves with more than 10,000 per-tile
+    entries (water levels, inflow offsets) give the single-grid answer
+    with the solve on the driver and on an executor."""
+    import richdem_spark.ops.accum as accum_mod
+    import richdem_spark.ops.fill as fill_mod
+    import richdem_spark.ops.solve as solve_mod
+
+    rng = np.random.default_rng(29)
+    dem = rng.integers(0, 100, (340, 340)).astype(np.float64)
+    want_fill = priority_flood_fill(dem)
+    want_acc = d8_flow_accum(d8_flow_directions(want_fill))
+    tr = raster_from_array(spark, dem, tile_w=5, tile_h=5)
+
+    def run():
+        filled = FillDepressions(tr)
+        return filled.to_array(), FlowAccumulation(filled, "D8").to_array()
+
+    counts = _count_solve_entries(monkeypatch, fill_mod, accum_mod)
+    on_driver = run()
+    assert counts[fill_mod.__name__] > 10_000, counts
+    assert counts[accum_mod.__name__] > 10_000, counts
+    monkeypatch.undo()
+    monkeypatch.setattr(solve_mod, "DRIVER_SOLVE_MAX_ROWS", 0)
+    for got_fill, got_acc in (on_driver, run()):
+        assert np.array_equal(got_fill, want_fill)
+        assert np.array_equal(got_acc, want_acc)
+
+
+def _children(node):
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _broadcast_solve_results(tr) -> int:
+    """Broadcast-hinted subtrees of the analyzed plan that are a global
+    solve's result: the first mapInPandas on some path below the hint
+    reads a single-partition repartition."""
+    def first_maps(node):
+        if node.nodeName() == "MapInPandas":
+            return [node]
+        return [m for c in _children(node) for m in first_maps(c)]
+
+    found = 0
+    stack = [tr.df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if (node.nodeName() == "ResolvedHint"
+                and "broadcast" in node.hints().toString()):
+            found += sum(
+                m.child().nodeName() == "Repartition"
+                and m.child().numPartitions() == 1
+                for m in first_maps(node.child()))
+        stack.extend(_children(node))
+    return found
+
+
+def test_executor_solve_result_is_not_broadcast(spark, monkeypatch):
+    """An executor-placed solve result reaches round 2 by a plain left
+    join: the analyzed plans of fill's and accumulation's output hold
+    no broadcast hint on it, so the driver never collects it."""
+    import richdem_spark.ops.solve as solve_mod
+
+    rng = np.random.default_rng(31)
+    tr = raster_from_array(
+        spark, rng.integers(0, 50, (24, 24)).astype(np.float64), 8, 8)
+    monkeypatch.setattr(solve_mod, "DRIVER_SOLVE_MAX_ROWS", 0)
+    filled = FillDepressions(tr)
+    assert _broadcast_solve_results(filled) == 0
+    assert _broadcast_solve_results(FlowAccumulation(filled, "D8")) == 0
+
+
+def test_executor_placement_persists_nothing_extra(spark, monkeypatch):
+    """Fill -> accumulation pins the same number of cached RDDs whether
+    the solves run on the driver or on an executor."""
+    import richdem_spark.ops.solve as solve_mod
+
+    jsc = spark.sparkContext._jsc
+
+    def new_persisted(seed):
+        # a fresh DEM per run, so no plan is already cached
+        dem = np.random.default_rng(seed).integers(0, 50, (24, 24))
+        tr = raster_from_array(spark, dem.astype(np.float64), 8, 8)
+        before = set(jsc.getPersistentRDDs().keys())
+        FlowAccumulation(FillDepressions(tr), "D8").to_array()
+        return len(set(jsc.getPersistentRDDs().keys()) - before)
+
+    on_driver = new_persisted(41)
+    monkeypatch.setattr(solve_mod, "DRIVER_SOLVE_MAX_ROWS", 0)
+    assert new_persisted(42) == on_driver
+
+
+def test_driver_solve_bound_follows_jvm_heap(spark):
+    """Without the test hook, the driver-placement bound is derived from
+    the driver JVM's max heap, never below 1 M rows."""
+    import richdem_spark.ops.solve as solve_mod
+
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime() \
+        .maxMemory()
+    assert solve_mod.DRIVER_SOLVE_MAX_ROWS is None
+    assert solve_mod.driver_solve_max(spark) == max(1_000_000, heap // 1500)
