@@ -534,11 +534,9 @@ def SurfaceArea(tr: TiledRaster) -> float:
         for pdf in it:
             for r in pdf.itertuples():
                 core = unpack(r.data, r.height, r.width, r.dtype)
-                strips = ([(s["slot"], s["strip"]) for s in r.halo]
-                          if r.halo is not None else [])
                 fillv = nodata if nodata is not None else 0.0
                 padded, pt, pl = assemble_padded(
-                    core, strips, r.dtype, fillv)
+                    core, r.halo, r.dtype, fillv)
                 g = dem_surface_area_grid(padded, nodata, lx, ly)
                 acc += float(
                     g[pt:pt + r.height, pl:pl + r.width].sum())

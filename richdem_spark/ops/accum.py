@@ -90,41 +90,7 @@ def _round1(weights_mode: str):
                 if weights_mode == "column":
                     w_arr = unpack(r.wdata, r.height, r.width, "float64")
                 acc = d8_flow_accum(dirs, weights=w_arr)
-                ex = exit_cell_of(dirs)
-                pxs, pys = _perimeter_indices(r.height, r.width)
-                flat = pys * r.width + pxs
-                q = ex[flat]
-                qx = np.where(q >= 0, q % r.width, -1).astype(np.int64)
-                qy = np.where(q >= 0, q // r.width, -1).astype(np.int64)
-                d = dirs.ravel()
-                qdir = np.where(q >= 0, d[np.maximum(q, 0)], 0).astype(
-                    np.int64
-                )
-                # qdir only matters when it steps OFF the tile
-                tgt_x = qx + D8X[np.clip(qdir, 0, 8)]
-                tgt_y = qy + D8Y[np.clip(qdir, 0, 8)]
-                exits = (
-                    (qdir >= 1) & (qdir <= 8)
-                    & ((tgt_x < 0) | (tgt_x >= r.width)
-                       | (tgt_y < 0) | (tgt_y >= r.height))
-                )
-                qdir = np.where(exits, qdir, 0)
-                valid = (d[flat] != FLOWDIR_NO_DATA).astype(np.int64)
-                out["tile_x"].append(r.tile_x)
-                out["tile_y"].append(r.tile_y)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dirs"].append(pack(dirs))
-                out["accum"].append(pack(acc))
-                out["nodata"].append(r.nodata)
-                out["px"].append(pack(pxs.astype(np.int64)))
-                out["py"].append(pack(pys.astype(np.int64)))
-                out["pacc"].append(pack(
-                    acc.ravel()[flat].astype(np.float64)))
-                out["qx"].append(pack(qx.astype(np.int64)))
-                out["qy"].append(pack(qy.astype(np.int64)))
-                out["qdir"].append(pack(qdir.astype(np.int64)))
-                out["pvalid"].append(pack(valid.astype(np.int64)))
+                _emit_r1_row(out, r, dirs, acc, r.nodata)
             yield pd.DataFrame(out)
 
     return run
@@ -355,9 +321,7 @@ def _round1_from_elev(meta: RasterMeta):
                 "nodata", "px", "py", "pacc", "qx", "qy", "qdir", "pvalid")}
             for r in pdf.itertuples():
                 core = unpack(r.data, r.height, r.width, r.dtype)
-                strips = ([(s["slot"], s["strip"]) for s in r.halo]
-                          if r.halo is not None else [])
-                padded, pt, pl = assemble_padded(core, strips, r.dtype,
+                padded, pt, pl = assemble_padded(core, r.halo, r.dtype,
                                                  fill)
                 dirs_p = d8_flow_directions(padded, nodata=nodata)
                 dirs = np.ascontiguousarray(

@@ -50,9 +50,9 @@ decomposition rests on three observations:
     tiled programs accept).
 
 Communication per breach: one distributed fill (two O(perimeter)
-exchanges), two halo strip broadcasts, one continuation exchange per
-PADDED-VIEW exit of the deepest breach path, one update shuffle.  Tile
-interiors are never re-shuffled.
+exchanges), two halo exchanges (tiles.halo_exchange), one continuation
+exchange per PADDED-VIEW exit of the deepest breach path, one update
+shuffle.  Tile interiors are never re-shuffled.
 
 Walk rounds are bounded by geometry, not by a magic constant: each tile
 walks over a depth-``WALK_HALO_K`` padded (raised, parent) view — the
@@ -87,10 +87,13 @@ from pyspark.sql.types import (
 from ..constants import D8X, D8Y, TOPO_D8
 from ..tiles import (
     TILE_SCHEMA,
+    Plane,
     TiledRaster,
     assemble_padded,
+    halo_exchange,
     halo_join,
     pack,
+    pad_planes,
     tile_frame,
     tiles_from_state,
     unpack,
@@ -119,8 +122,10 @@ _PARENT_SCHEMA = StructType([
 
 # walk-halo depth: a breach path within this many cells of a seam keeps
 # walking in-round; only deeper dives into a neighbour cost another
-# round.  Strip bytes per tile side = K * side * 9 — still O(perimeter).
+# round.  Piece bytes per tile side = K * side * 9 — still O(perimeter).
 WALK_HALO_K = 8
+
+_WALK_PLANES = [Plane("raised", "float64"), Plane("parent", "uint8")]
 
 _WSTATE_SCHEMA = StructType([
     StructField("tile_x", IntegerType(), False),
@@ -133,13 +138,6 @@ _WSTATE_SCHEMA = StructType([
     StructField("pw", IntegerType(), False),
     StructField("praised", BinaryType(), False),  # float64 ph*pw
     StructField("pparent", BinaryType(), False),  # uint8 ph*pw
-])
-
-_WSTRIP_SCHEMA = StructType([
-    StructField("tile_x", IntegerType(), False),
-    StructField("tile_y", IntegerType(), False),
-    StructField("slot", IntegerType(), False),
-    StructField("strip", BinaryType(), False),
 ])
 
 _TRACE_SCHEMA = StructType([
@@ -183,11 +181,9 @@ def _pit_raise_wave(meta, eps_gradients: bool):
             for r in pdf.itertuples():
                 core = unpack(r.data, r.height, r.width, r.dtype).astype(
                     np.float64)
-                strips = ([(s["slot"], s["strip"]) for s in r.halo]
-                          if r.halo is not None else [])
                 fillv = nodata if nodata is not None else 0.0
                 padded, pt, pl = assemble_padded(
-                    core, strips, "float64", fillv)
+                    core, r.halo, "float64", fillv)
                 ph, pw = padded.shape
                 nd = (np.zeros(padded.shape, bool) if nodata is None
                       else padded == nodata)
@@ -236,122 +232,27 @@ def _pit_raise_wave(meta, eps_gradients: bool):
 
 def _build_walk_state(walk_state, meta):
     """Depth-``WALK_HALO_K`` padded (raised, parent) view per tile: ONE
-    strip exchange (O(perimeter)), strips broadcast under the same
-    budget as halo_join.  Each strip blob is the float64 raised piece
-    followed by the uint8 parent piece; piece shapes are re-derived from
-    the slot geometry at assembly (ragged edges send thinner strips,
-    exactly as ops/mfd.py:_assemble_props)."""
-    ntx, nty = meta.ntiles_x, meta.ntiles_y
-    tw, th = meta.tile_w, meta.tile_h
-    k = WALK_HALO_K
-
-    def emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"tile_x": [], "tile_y": [], "slot": [], "strip": []}
-            for r in pdf.itertuples():
-                h, w = r.height, r.width
-                a = unpack(r.raised, h, w, "float64")
-                p = unpack(r.parent, h, w, "uint8")
-                pieces = {
-                    3: (a[-k:, :], p[-k:, :]),
-                    7: (a[:k, :], p[:k, :]),
-                    1: (a[:, -k:], p[:, -k:]),
-                    5: (a[:, :k], p[:, :k]),
-                    2: (a[-k:, -k:], p[-k:, -k:]),
-                    4: (a[-k:, :k], p[-k:, :k]),
-                    8: (a[:k, -k:], p[:k, -k:]),
-                    6: (a[:k, :k], p[:k, :k]),
-                }
-                for slot, (ap, pp) in pieces.items():
-                    ntx_ = r.tile_x - int(D8X[slot])
-                    nty_ = r.tile_y - int(D8Y[slot])
-                    if 0 <= ntx_ < ntx and 0 <= nty_ < nty:
-                        out["tile_x"].append(ntx_)
-                        out["tile_y"].append(nty_)
-                        out["slot"].append(slot)
-                        out["strip"].append(pack(ap) + pack(pp))
-            yield pd.DataFrame(out)
-
-    strips = walk_state.mapInPandas(emit, _WSTRIP_SCHEMA)
-    packed = strips.groupBy("tile_x", "tile_y").agg(
-        F.collect_list(F.struct("slot", "strip")).alias("whalo")
-    )
-    from ..tiles import HALO_BROADCAST_MAX_BYTES
-
-    perim_bytes = ntx * nty * 2 * (tw + th) * k * 9 * 4
-    if perim_bytes <= HALO_BROADCAST_MAX_BYTES:
-        packed = F.broadcast(packed)
-    joined = walk_state.join(packed, ["tile_x", "tile_y"], "left")
+    halo exchange of both planes (tiles.halo_exchange; ragged edges
+    send thinner pieces)."""
+    joined = halo_exchange(walk_state, meta, _WALK_PLANES, WALK_HALO_K)
 
     def assemble(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {f.name: [] for f in _WSTATE_SCHEMA.fields}
             for r in pdf.itertuples():
                 h, w = r.height, r.width
-                tx, ty = r.tile_x, r.tile_y
-                a = unpack(r.raised, h, w, "float64")
-                p = unpack(r.parent, h, w, "uint8")
-                slot_map = ({s["slot"]: s["strip"] for s in r.whalo}
-                            if r.whalo is not None else {})
-
-                def dims(ddx, ddy):
-                    tx2, ty2 = tx + ddx, ty + ddy
-                    if not (0 <= tx2 < ntx and 0 <= ty2 < nty):
-                        return 0, 0
-                    w2, h2 = meta.tile_dims(tx2, ty2)
-                    return min(k, w2), min(k, h2)
-
-                _, pt = dims(0, -1)
-                _, pb = dims(0, 1)
-                pl, _ = dims(-1, 0)
-                pr, _ = dims(1, 0)
-                pt = pt if 3 in slot_map else 0
-                pb = pb if 7 in slot_map else 0
-                pl = pl if 1 in slot_map else 0
-                pr = pr if 5 in slot_map else 0
-                ph, pw = h + pt + pb, w + pl + pr
-                A = np.full((ph, pw), np.inf)
-                P = np.zeros((ph, pw), np.uint8)
-                A[pt:pt + h, pl:pl + w] = a
-                P[pt:pt + h, pl:pl + w] = p
-
-                def put(slot, ys, xs, sh):
-                    if slot in slot_map and sh[0] and sh[1]:
-                        blob = slot_map[slot]
-                        n = sh[0] * sh[1]
-                        A[ys, xs] = np.frombuffer(
-                            blob, np.float64, n).reshape(sh)
-                        P[ys, xs] = np.frombuffer(
-                            blob, np.uint8, n, offset=8 * n).reshape(sh)
-
-                put(3, slice(0, pt), slice(pl, pl + w), (pt, w))
-                put(7, slice(pt + h, ph), slice(pl, pl + w), (pb, w))
-                put(1, slice(pt, pt + h), slice(0, pl), (h, pl))
-                put(5, slice(pt, pt + h), slice(pl + w, pw), (h, pr))
-                if pt and pl:
-                    cw, ch = dims(-1, -1)
-                    put(2, slice(pt - ch, pt), slice(pl - cw, pl),
-                        (ch, cw))
-                if pt and pr:
-                    cw, ch = dims(1, -1)
-                    put(4, slice(pt - ch, pt),
-                        slice(pl + w, pl + w + cw), (ch, cw))
-                if pb and pr:
-                    cw, ch = dims(1, 1)
-                    put(6, slice(pt + h, pt + h + ch),
-                        slice(pl + w, pl + w + cw), (ch, cw))
-                if pb and pl:
-                    cw, ch = dims(-1, 1)
-                    put(8, slice(pt + h, pt + h + ch),
-                        slice(pl - cw, pl), (ch, cw))
-                out["tile_x"].append(tx)
-                out["tile_y"].append(ty)
+                (A, P), pt, pl = pad_planes(
+                    [unpack(r.raised, h, w, "float64"),
+                     unpack(r.parent, h, w, "uint8")],
+                    r.halo, [np.inf, 0])
+                out["tile_x"].append(r.tile_x)
+                out["tile_y"].append(r.tile_y)
                 out["w"].append(w)
                 out["h"].append(h)
                 out["pt"].append(pt)
                 out["pl"].append(pl)
-                out["ph"].append(ph)
-                out["pw"].append(pw)
+                out["ph"].append(A.shape[0])
+                out["pw"].append(A.shape[1])
                 out["praised"].append(pack(A))
                 out["pparent"].append(pack(P))
             yield pd.DataFrame(out)

@@ -141,10 +141,8 @@ def _wave_a(meta: RasterMeta, topology: str, custom_ocean: bool = False):
                 core = unpack(r.data, r.height, r.width, r.dtype).astype(
                     np.float64
                 )
-                strips = ([(s["slot"], s["strip"]) for s in r.halo]
-                          if r.halo is not None else [])
                 padded, pt, pl = assemble_padded(
-                    core, strips, "float64", np.nan
+                    core, r.halo, "float64", np.nan
                 )
                 h, w = r.height, r.width
                 # embed into a full 1-ring frame; off-DEM = +inf
@@ -159,11 +157,8 @@ def _wave_a(meta: RasterMeta, topology: str, custom_ocean: bool = False):
                 oc = np.zeros((h + 2, w + 2), dtype=bool)
                 if custom_ocean:
                     om = unpack(r.omask, h, w, "uint8")
-                    ostrips = ([(s["slot"], s["strip"])
-                                for s in r.ohalo]
-                               if r.ohalo is not None else [])
                     opad, opt, opl = assemble_padded(
-                        om, ostrips, "uint8", 0)
+                        om, r.ohalo, "uint8", 0)
                     oc[1 - opt: 1 - opt + opad.shape[0],
                        1 - opl: 1 - opl + opad.shape[1]] = \
                         opad.astype(bool)

@@ -41,18 +41,29 @@ from pyspark.sql.types import (
 from ..constants import D8X, D8Y, FLOWDIR_NO_DATA, NO_FLOW, TOPO_D8
 from ..kernels.ccl import label_components
 from ..tiles import (
+    HALO_STRIP_COLS,
     TILE_SCHEMA,
+    Plane,
     RasterMeta,
     TiledRaster,
     assemble_padded,
+    border_strips,
+    halo_exchange,
     halo_join,
     pack,
+    pad_planes,
     tile_frame,
     unpack,
 )
 from .solve import perimeter_rows, solve_per_tile
 
 _IMAX = np.iinfo(np.int64).max
+
+_LAB_STRIPS = ("lab_n", "lab_s", "lab_w", "lab_e")
+_ELV_STRIPS = ("elv_n", "elv_s", "elv_w", "elv_e")
+# the two gradient planes (away-from-higher, towards-lower) of one
+# depth-1 halo exchange per BFS round
+_DIST_PLANES = [Plane("dist_hi", "int64"), Plane("dist_lo", "int64")]
 
 _STATE_SCHEMA = StructType(
     [
@@ -86,9 +97,9 @@ _DIST2_SCHEMA = StructType(
         StructField("dist_hi", BinaryType(), False),  # away-from-higher
         StructField("dist_lo", BinaryType(), False),  # towards-lower
         StructField("changed", IntegerType(), False),
-        # dual-plane border strips (hi bytes ++ lo bytes per side) so
-        # each round's halo exchange is assembled in the JVM — no Python
-        # strip-emission pass over the distance blobs per round
+        # border strips of both planes (tiles.border_strips), so each
+        # round's halo exchange is cut in the JVM — no Python pass over
+        # the distance blobs per round
         StructField("hs_n", BinaryType(), True),
         StructField("hs_s", BinaryType(), True),
         StructField("hs_w", BinaryType(), True),
@@ -97,61 +108,9 @@ _DIST2_SCHEMA = StructType(
 )
 
 
-def _dual_strips(out: dict, hi, lo) -> None:
-    import numpy as np
-
-    from ..tiles import pack as _p
-
-    out["hs_n"].append(_p(hi[0, :]) + _p(lo[0, :]))
-    out["hs_s"].append(_p(hi[-1, :]) + _p(lo[-1, :]))
-    out["hs_w"].append(_p(np.ascontiguousarray(hi[:, 0]))
-                       + _p(np.ascontiguousarray(lo[:, 0])))
-    out["hs_e"].append(_p(np.ascontiguousarray(hi[:, -1]))
-                       + _p(np.ascontiguousarray(lo[:, -1])))
-
-
-def _jvm_dual_strip_table(dist_df, ntx: int, nty: int):
-    """(receiver tile, slot, dual strip) rows from the carried strip
-    columns — the JVM twin of the former ``emit_dual`` Python pass.
-    Corner pieces concatenate the hi and lo corner elements so the
-    receiver's byte-midpoint split still separates the planes."""
-    isz = 8  # int64 distances
-
-    def dual_first(col: str):
-        return F.expr(
-            f"concat(substring({col}, 1, {isz}), "
-            f"substring({col}, width * {isz} + 1, {isz}))")
-
-    def dual_last(col: str):
-        return F.expr(
-            f"concat(substring({col}, (width - 1) * {isz} + 1, {isz}), "
-            f"substring({col}, (2 * width - 1) * {isz} + 1, {isz}))")
-
-    entries = [
-        (3, 0, 1, F.col("hs_s")),
-        (7, 0, -1, F.col("hs_n")),
-        (1, 1, 0, F.col("hs_e")),
-        (5, -1, 0, F.col("hs_w")),
-        (2, 1, 1, dual_last("hs_s")),
-        (4, -1, 1, dual_first("hs_s")),
-        (8, 1, -1, dual_last("hs_n")),
-        (6, -1, -1, dual_first("hs_n")),
-    ]
-    pieces = F.array(*[
-        F.struct(
-            (F.col("tile_x") + dx).alias("tile_x"),
-            (F.col("tile_y") + dy).alias("tile_y"),
-            F.lit(slot).alias("slot"),
-            strip.alias("strip"),
-        )
-        for slot, dx, dy, strip in entries
-    ])
-    return (
-        dist_df.select(F.explode(pieces).alias("p"))
-        .select("p.tile_x", "p.tile_y", "p.slot", "p.strip")
-        .where((F.col("tile_x") >= 0) & (F.col("tile_x") < ntx)
-               & (F.col("tile_y") >= 0) & (F.col("tile_y") < nty))
-    )
+def _put_strips(out: dict, names, *planes) -> None:
+    for name, strip in zip(names, border_strips(*planes)):
+        out[name].append(strip)
 
 
 def _shifts(h, w, topology: str = TOPO_D8):
@@ -243,14 +202,10 @@ def resolve_flats_distributed(
             for r in pdf.itertuples():
                 e_core = unpack(r.data, r.height, r.width, r.dtype)
                 d_core = unpack(r.ddata, r.height, r.width, r.ddtype)
-                strips_e = ([(s["slot"], s["strip"]) for s in r.halo]
-                            if r.halo is not None else [])
-                strips_d = ([(s["slot"], s["strip"]) for s in r.dhalo]
-                            if r.dhalo is not None else [])
-                pe, pt, pl = assemble_padded(e_core, strips_e, r.dtype,
+                pe, pt, pl = assemble_padded(e_core, r.halo, r.dtype,
                                              np.nan)
                 pdirs, _, _ = assemble_padded(
-                    d_core, strips_d, r.ddtype, float(FLOWDIR_NO_DATA))
+                    d_core, r.dhalo, r.ddtype, float(FLOWDIR_NO_DATA))
                 ph, pw = pe.shape
                 core = (slice(pt, pt + r.height), slice(pl, pl + r.width))
 
@@ -304,18 +259,8 @@ def resolve_flats_distributed(
                 out["labels"].append(pack(labels))
                 out["low"].append(pack(lowc.astype(np.uint8)))
                 out["high"].append(pack(highc.astype(np.uint8)))
-                out["lab_n"].append(pack(labels[0, :]))
-                out["lab_s"].append(pack(labels[-1, :]))
-                out["lab_w"].append(pack(np.ascontiguousarray(
-                    labels[:, 0])))
-                out["lab_e"].append(pack(np.ascontiguousarray(
-                    labels[:, -1])))
-                out["elv_n"].append(pack(ecore[0, :].astype(np.float64)))
-                out["elv_s"].append(pack(ecore[-1, :].astype(np.float64)))
-                out["elv_w"].append(pack(np.ascontiguousarray(
-                    ecore[:, 0]).astype(np.float64)))
-                out["elv_e"].append(pack(np.ascontiguousarray(
-                    ecore[:, -1]).astype(np.float64)))
+                _put_strips(out, _LAB_STRIPS, labels)
+                _put_strips(out, _ELV_STRIPS, ecore.astype(np.float64))
                 out["lid"].append([int(x) for x in lids])
                 out["lid_low"].append([int(x) for x in has_low])
             yield pd.DataFrame(out)
@@ -420,20 +365,10 @@ def resolve_flats_distributed(
                     [amap.get(int(u), 0) if u > 0 else 0
                      for u in uniq.tolist()], dtype=np.int64)
                 labels = lut[inv].reshape(labels.shape)
+                out["labels"].append(pack(labels))
+                _put_strips(out, _LAB_STRIPS, labels)
                 for f in _STATE_SCHEMA.fields:
-                    if f.name == "labels":
-                        out[f.name].append(pack(labels))
-                    elif f.name == "lab_n":
-                        out[f.name].append(pack(labels[0, :]))
-                    elif f.name == "lab_s":
-                        out[f.name].append(pack(labels[-1, :]))
-                    elif f.name == "lab_w":
-                        out[f.name].append(pack(np.ascontiguousarray(
-                            labels[:, 0])))
-                    elif f.name == "lab_e":
-                        out[f.name].append(pack(np.ascontiguousarray(
-                            labels[:, -1])))
-                    else:
+                    if f.name != "labels" and f.name not in _LAB_STRIPS:
                         out[f.name].append(getattr(r, f.name))
             yield pd.DataFrame(out)
 
@@ -483,7 +418,7 @@ def resolve_flats_distributed(
                 out["dist_hi"].append(pack(planes[0]))
                 out["dist_lo"].append(pack(planes[1]))
                 out["changed"].append(1)
-                _dual_strips(out, planes[0], planes[1])
+                _put_strips(out, HALO_STRIP_COLS, *planes)
             yield pd.DataFrame(out)
 
     _t0 = _time.perf_counter()
@@ -492,33 +427,16 @@ def resolve_flats_distributed(
     if metrics is not None:
         metrics["bfs_init_sec"] = round(_time.perf_counter() - _t0, 3)
 
-    ntx_, nty_ = meta.ntiles_x, meta.ntiles_y
-
-    from ..tiles import HALO_BROADCAST_MAX_BYTES
-
-    perim_bytes = ntx_ * nty_ * 2 * (meta.tile_w + meta.tile_h) * 8 * 4
-
     _t0 = _time.perf_counter()
     _rounds = 0
     _round_secs: list[float] = []
     for _ in range(max_rounds):
         _rounds += 1
         _tr0 = _time.perf_counter()
-        packed = _jvm_dual_strip_table(
-            dist_df.select("tile_x", "tile_y", "width",
-                           "hs_n", "hs_s", "hs_w", "hs_e"),
-            ntx_, nty_,
-        ).groupBy("tile_x", "tile_y").agg(
-            F.collect_list(F.struct("slot", "strip"))
-            .alias("dist_halo"))
-        if perim_bytes <= HALO_BROADCAST_MAX_BYTES:
-            packed = F.broadcast(packed)
-        joined = st2.select(
-            "tile_x", "tile_y", "width", "height", "dirs", "labels"
-        ).join(dist_df.select("tile_x", "tile_y", "dist_hi", "dist_lo"),
-               ["tile_x", "tile_y"]) \
-         .join(packed, ["tile_x", "tile_y"], "left") \
-         .join(lab_halo, ["tile_x", "tile_y"], "left")
+        joined = st2.select("tile_x", "tile_y", "dirs", "labels") \
+            .join(halo_exchange(dist_df, meta, _DIST_PLANES),
+                  ["tile_x", "tile_y"]) \
+            .join(lab_halo, ["tile_x", "tile_y"], "left")
 
         def relax2(it):
             for pdf in it:
@@ -527,27 +445,16 @@ def resolve_flats_distributed(
                     labels = unpack(r.labels, r.height, r.width,
                                     "int64")
                     dirs_a = unpack(r.dirs, r.height, r.width, "uint8")
-                    sd_hi, sd_lo = [], []
-                    if r.dist_halo is not None:
-                        for s in r.dist_halo:
-                            blob = s["strip"]
-                            half = len(blob) // 2
-                            sd_hi.append((s["slot"], blob[:half]))
-                            sd_lo.append((s["slot"], blob[half:]))
-                    sl = ([(s["slot"], s["strip"])
-                           for s in r.lab_halo]
-                          if r.lab_halo is not None else [])
                     plab, _, _ = assemble_padded(
-                        labels, sl, "int64", -1.0)
+                        labels, r.lab_halo, "int64", -1.0)
                     allowed = (dirs_a == NO_FLOW) & (labels > 0)
                     changed = 0
                     news = []
-                    for blob, strips in ((r.dist_hi, sd_hi),
-                                         (r.dist_lo, sd_lo)):
-                        dist = unpack(blob, r.height, r.width,
-                                      "int64").copy()
-                        pdist, pt, pl = assemble_padded(
-                            dist, strips, "int64", float(_IMAX))
+                    dists = [unpack(blob, r.height, r.width, "int64")
+                             for blob in (r.dist_hi, r.dist_lo)]
+                    pdists, pt, pl = pad_planes(dists, r.halo,
+                                                [_IMAX, _IMAX])
+                    for dist, pdist in zip(dists, pdists):
                         ph, pw = pdist.shape
                         core = (slice(pt, pt + r.height),
                                 slice(pl, pl + r.width))
@@ -575,7 +482,7 @@ def resolve_flats_distributed(
                     out["dist_hi"].append(pack(news[0]))
                     out["dist_lo"].append(pack(news[1]))
                     out["changed"].append(changed)
-                    _dual_strips(out, news[0], news[1])
+                    _put_strips(out, HALO_STRIP_COLS, *news)
                 yield pd.DataFrame(out)
 
         # lazy localCheckpoint: the changed-count agg below is the
@@ -733,12 +640,8 @@ def flow_dirs_through_flats(
                 d = unpack(r.data, r.height, r.width, r.dtype)
                 mk = unpack(r.mdata, r.height, r.width, "int64")
                 lb = unpack(r.ldata, r.height, r.width, "int64")
-                sm = ([(s["slot"], s["strip"]) for s in r.mhalo]
-                      if r.mhalo is not None else [])
-                slb = ([(s["slot"], s["strip"]) for s in r.lhalo]
-                       if r.lhalo is not None else [])
-                pm, pt, pl = assemble_padded(mk, sm, "int64", -1.0)
-                plb, _, _ = assemble_padded(lb, slb, "int64", -2.0)
+                pm, pt, pl = assemble_padded(mk, r.mhalo, "int64", -1.0)
+                plb, _, _ = assemble_padded(lb, r.lhalo, "int64", -2.0)
                 pd_dirs = np.full(pm.shape, 0, dtype=np.uint8)
                 pd_dirs[pt : pt + r.height, pl : pl + r.width] = d
                 # run the masked flowdir on the padded arrays; slice core
@@ -830,12 +733,8 @@ def dinf_flow_flats_distributed(
                 a = unpack(r.data, r.height, r.width, "float64")
                 mk = unpack(r.mdata, r.height, r.width, "int64")
                 lb = unpack(r.ldata, r.height, r.width, "int64")
-                sm = ([(s["slot"], s["strip"]) for s in r.mhalo]
-                      if r.mhalo is not None else [])
-                slb = ([(s["slot"], s["strip"]) for s in r.lhalo]
-                       if r.lhalo is not None else [])
-                pm, pt, pl = assemble_padded(mk, sm, "int64", -1.0)
-                plb, _, _ = assemble_padded(lb, slb, "int64", 0.0)
+                pm, pt, pl = assemble_padded(mk, r.mhalo, "int64", -1.0)
+                plb, _, _ = assemble_padded(lb, r.lhalo, "int64", 0.0)
                 pa = np.full(pm.shape, DINF_NO_FLOW, dtype=np.float64)
                 # halo angles irrelevant (only the core is resolved and
                 # group checks guard neighbours); mark halo as flowing so

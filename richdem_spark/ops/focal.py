@@ -56,12 +56,7 @@ def apply_focal(
             rows = []
             for r in pdf.itertuples():
                 core = unpack(r.data, r.height, r.width, r.dtype)
-                strips = (
-                    [(s["slot"], s["strip"]) for s in r.halo]
-                    if r.halo is not None
-                    else []
-                )
-                padded, pt, pl = assemble_padded(core, strips, r.dtype, fill)
+                padded, pt, pl = assemble_padded(core, r.halo, r.dtype, fill)
                 import time as _time
 
                 t0 = _time.perf_counter()

@@ -129,13 +129,9 @@ def fill_depressions_max_dep(
                 h, w = r.height, r.width
                 dem = unpack(r.dem, h, w, r.dtype).astype(np.float64)
                 fil = unpack(r.fil, h, w, "float64")
-                dstr = ([(s["slot"], s["strip"]) for s in r.dhalo]
-                        if r.dhalo is not None else [])
-                fstr = ([(s["slot"], s["strip"]) for s in r.fhalo]
-                        if r.fhalo is not None else [])
-                demp0, pt, pl = assemble_padded(dem, dstr, r.dtype, 0.0)
+                demp0, pt, pl = assemble_padded(dem, r.dhalo, r.dtype, 0.0)
                 demp = demp0.astype(np.float64)
-                filp, _, _ = assemble_padded(fil, fstr, "float64", 0.0)
+                filp, _, _ = assemble_padded(fil, r.fhalo, "float64", 0.0)
                 dlt = filp > demp
                 core = np.s_[pt:pt + h, pl:pl + w]
                 comp0 = label_components(dlt[core], conn).astype(np.int64)

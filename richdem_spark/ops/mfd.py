@@ -6,9 +6,10 @@ neighbours, so the single-exit perimeter-graph trick does not apply.  We
 exploit linearity instead: accumulation is linear in its sources, so
 
 1. **Round 0**: per-tile proportions from the haloed elevations (FM_*),
-   then ONE exchange of proportions border strips so every tile holds
-   the PADDED proportions tensor (its own cells + the true proportions
-   of the 1-ring of neighbouring cells).  Unit sources on the tile's own
+   then ONE depth-``HALO_K`` halo exchange of the proportions
+   (tiles.halo_exchange) so every tile holds the PADDED proportions
+   tensor (its own cells + the true proportions of the ``HALO_K``-ring
+   of neighbouring cells).  Unit sources on the tile's own
    cells are propagated over the padded tensor: mass that meanders
    through the neighbour ring and back is routed in-round instead of
    ping-ponging one seam crossing per round (a river hugging a tile
@@ -45,11 +46,14 @@ from pyspark.sql.types import (
 from ..constants import D8X, D8Y, NO_DATA_GEN
 from ..kernels import flowmet as fmk
 from ..tiles import (
+    Plane,
     RasterMeta,
     TiledRaster,
     assemble_padded,
+    halo_exchange,
     halo_join,
     pack,
+    pad_planes,
     tiles_from_state,
     unpack,
 )
@@ -86,15 +90,6 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
-_STRIP_SCHEMA = StructType(
-    [
-        StructField("tile_x", IntegerType(), False),
-        StructField("tile_y", IntegerType(), False),
-        StructField("slot", IntegerType(), False),
-        StructField("strip", BinaryType(), False),
-    ]
-)
-
 _FMS = {
     "Quinn": lambda e, nd, p: fmk.fm_quinn(e, nd),
     "Holmgren": lambda e, nd, p: fmk.fm_holmgren(e, nd, x=p or 1.0),
@@ -105,93 +100,11 @@ _FMS = {
 
 
 # proportions-halo depth: mass meandering within this many cells of a
-# seam is routed in-round; only deeper dives cost another round.  Strip
+# seam is routed in-round; only deeper dives cost another round.  Piece
 # bytes per tile side = HALO_K * side * 9 * 4 — still O(perimeter).
 HALO_K = 8
 
-
-def _emit_props_strips(meta: RasterMeta):
-    """Depth-HALO_K border strips of the (h, w, 9) proportions tensor,
-    keyed by the RECEIVING tile (the tiles.halo_join slot mapping
-    applied to the 3-D tensor, k rows/cols deep)."""
-    ntx, nty = meta.ntiles_x, meta.ntiles_y
-    k = HALO_K
-
-    def emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"tile_x": [], "tile_y": [], "slot": [], "strip": []}
-            for r in pdf.itertuples():
-                a = np.frombuffer(r.props, np.float32).reshape(
-                    r.height, r.width, 9)
-                pieces = {
-                    3: a[-k:, :, :], 7: a[:k, :, :],
-                    1: a[:, -k:, :], 5: a[:, :k, :],
-                    2: a[-k:, -k:, :], 4: a[-k:, :k, :],
-                    8: a[:k, -k:, :], 6: a[:k, :k, :],
-                }
-                for slot, piece in pieces.items():
-                    ntx_ = r.tile_x - int(D8X[slot])
-                    nty_ = r.tile_y - int(D8Y[slot])
-                    if 0 <= ntx_ < ntx and 0 <= nty_ < nty:
-                        out["tile_x"].append(ntx_)
-                        out["tile_y"].append(nty_)
-                        out["slot"].append(slot)
-                        out["strip"].append(pack(piece))
-            yield pd.DataFrame(out)
-
-    return emit
-
-
-def _assemble_props(core: np.ndarray, strips, h, w, meta, tx, ty):
-    """Padded (ph, pw, 9) tensor with depth-HALO_K sides; unpadded on
-    global-edge sides.  Piece thicknesses follow the neighbouring tiles'
-    actual dims (ragged edges send thinner strips)."""
-    slot_map = dict(strips)
-    k = HALO_K
-
-    def dims(ddx, ddy):
-        tx2, ty2 = tx + ddx, ty + ddy
-        if not (0 <= tx2 < meta.ntiles_x and 0 <= ty2 < meta.ntiles_y):
-            return 0, 0
-        w2, h2 = meta.tile_dims(tx2, ty2)
-        return min(k, w2), min(k, h2)
-
-    _, pt = dims(0, -1)
-    _, pb = dims(0, 1)
-    pl, _ = dims(-1, 0)
-    pr, _ = dims(1, 0)
-    pt = pt if 3 in slot_map else 0
-    pb = pb if 7 in slot_map else 0
-    pl = pl if 1 in slot_map else 0
-    pr = pr if 5 in slot_map else 0
-    P = np.zeros((h + pt + pb, w + pl + pr, 9), dtype=np.float32)
-    P[pt:pt + h, pl:pl + w, :] = core
-
-    def put(slot, ys, xs, sh):
-        if slot in slot_map and sh[0] and sh[1]:
-            P[ys, xs, :] = np.frombuffer(
-                slot_map[slot], np.float32).reshape(sh)
-
-    put(3, slice(0, pt), slice(pl, pl + w), (pt, w, 9))
-    put(7, slice(pt + h, pt + h + pb), slice(pl, pl + w), (pb, w, 9))
-    put(1, slice(pt, pt + h), slice(0, pl), (h, pl, 9))
-    put(5, slice(pt, pt + h), slice(pl + w, pl + w + pr), (h, pr, 9))
-    if pt and pl:
-        cw, ch = dims(-1, -1)
-        put(2, slice(pt - ch, pt), slice(pl - cw, pl), (ch, cw, 9))
-    if pt and pr:
-        cw, ch = dims(1, -1)
-        put(4, slice(pt - ch, pt), slice(pl + w, pl + w + cw),
-            (ch, cw, 9))
-    if pb and pr:
-        cw, ch = dims(1, 1)
-        put(6, slice(pt + h, pt + h + ch), slice(pl + w, pl + w + cw),
-            (ch, cw, 9))
-    if pb and pl:
-        cw, ch = dims(-1, 1)
-        put(8, slice(pt + h, pt + h + ch), slice(pl - cw, pl),
-            (ch, cw, 9))
-    return P, pt, pl
+_PROPS_PLANE = Plane("props", "float32", (9,))
 
 
 def _route(P, weights_padded, tile_x, tile_y, pt, pl, h, w, meta):
@@ -267,10 +180,8 @@ def flow_accumulation_mfd(
             out = {f.name: [] for f in _PROPS_SCHEMA.fields}
             for r in pdf.itertuples():
                 core = unpack(r.data, r.height, r.width, r.dtype)
-                strips = ([(s["slot"], s["strip"]) for s in r.halo]
-                          if r.halo is not None else [])
                 fill = r.nodata if r.nodata is not None else 0.0
-                padded, pt, pl = assemble_padded(core, strips, r.dtype,
+                padded, pt, pl = assemble_padded(core, r.halo, r.dtype,
                                                  fill)
                 props_p = fm(padded.astype(np.float64), r.nodata,
                              exponent)
@@ -287,19 +198,8 @@ def flow_accumulation_mfd(
     pdf_props = halo_join(tr).mapInPandas(props_wave, _PROPS_SCHEMA) \
         .localCheckpoint(eager=True)
 
-    # ---- exchange props strips; round 0 over the padded tensor ------
-    strips_df = pdf_props.mapInPandas(
-        _emit_props_strips(meta), _STRIP_SCHEMA)
-    packed = strips_df.groupBy("tile_x", "tile_y").agg(
-        F.collect_list(F.struct("slot", "strip")).alias("phalo")
-    )
-    from ..tiles import HALO_BROADCAST_MAX_BYTES
-
-    perim_bytes = (meta.ntiles_x * meta.ntiles_y
-                   * 2 * (tw + th) * 9 * 4 * 4)
-    if perim_bytes <= HALO_BROADCAST_MAX_BYTES:
-        packed = F.broadcast(packed)
-    joined0 = pdf_props.join(packed, ["tile_x", "tile_y"], "left")
+    # ---- exchange props pieces; round 0 over the padded tensor ------
+    joined0 = halo_exchange(pdf_props, meta, [_PROPS_PLANE], HALO_K)
 
     def round0(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -308,10 +208,7 @@ def flow_accumulation_mfd(
                 h, w = r.height, r.width
                 core = np.frombuffer(r.props, np.float32).reshape(
                     h, w, 9)
-                strips = ([(s["slot"], s["strip"]) for s in r.phalo]
-                          if r.phalo is not None else [])
-                P, pt, pl = _assemble_props(
-                    core, strips, h, w, meta, r.tile_x, r.tile_y)
+                (P,), pt, pl = pad_planes([core], r.halo, [0.0])
                 ph, pw = P.shape[:2]
                 wts = np.zeros((ph, pw))
                 flags = P[pt:pt + h, pl:pl + w, 0]

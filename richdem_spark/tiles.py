@@ -14,9 +14,10 @@ reference's ``TileInfo`` grid
 (``programs/parallel_priority_flood/main.cpp:66-116``).
 
 Every tile row is built by :func:`tile_frame`, so the strips always
-exist and always match ``data``; :func:`halo_join` has one path, which
-reads only the strips.  Tables read back from disk are checked for every
-column.
+exist and always match ``data``; :func:`halo_join` reads only the
+strips.  Tables read back from disk are checked for every column.  The
+halo exchange of every operator, at any depth and over any planes, is
+:func:`halo_exchange` plus :func:`pad_planes`.
 
 Scale notes (100 TB design):
 
@@ -35,7 +36,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -50,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .constants import GRID_BOTTOM, GRID_LEFT, GRID_RIGHT, GRID_TOP
+from .constants import D8X, D8Y, GRID_BOTTOM, GRID_LEFT, GRID_RIGHT, GRID_TOP
 
 # Border strips of ``data``: N row, S row, W column, E column, same
 # dtype.  Every tile row carries them, so :func:`halo_join` assembles the
@@ -152,10 +153,8 @@ def _tile_columns(rows) -> dict[str, list]:
         cols["dtype"].append(str(arr.dtype))
         cols["nodata"].append(None if nodata is None else float(nodata))
         cols["data"].append(pack(arr))
-        cols["hs_n"].append(pack(arr[0, :]))
-        cols["hs_s"].append(pack(arr[-1, :]))
-        cols["hs_w"].append(pack(arr[:, 0]))
-        cols["hs_e"].append(pack(arr[:, -1]))
+        for c, strip in zip(HALO_STRIP_COLS, border_strips(arr)):
+            cols[c].append(strip)
     return cols
 
 
@@ -392,131 +391,262 @@ def read_raster_table(spark: SparkSession, table: str) -> TiledRaster:
 # ---------------------------------------------------------------------------
 # Halo exchange
 # ---------------------------------------------------------------------------
+#
+# The one cross-tile communication primitive (the reference's O(perimeter)
+# border exchange, programs/parallel_priority_flood/main.cpp:1-4).  This
+# module alone knows how it works:
+#
+# * cut   -- each tile's border pieces at depth k from one or more planes;
+# * key   -- each piece addressed to its receiving tile by slot;
+# * ship  -- one groupBy, broadcast or co-partitioned (halo_exchange);
+# * paste -- the padded arrays (pad_planes / assemble_padded).
+#
+# A piece carries every plane: the planes' pieces concatenated in order.
 
-# above this many bytes of packed halo strips, broadcasting them is no
-# longer sensible; the join instead relies on both sides sharing the
-# canonical (tile_x, tile_y) hash partitioning (see halo_join)
+# above this many bytes of halo pieces, broadcasting them is no longer
+# sensible; the join instead relies on both sides sharing the canonical
+# (tile_x, tile_y) hash partitioning (see halo_exchange)
 HALO_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
-# strip slot ids: position of the CONTRIBUTING strip relative to the
-# receiving tile, using the reference's D8 numbering (constants.hpp:5-10)
+
+class Plane(NamedTuple):
+    """One per-tile array a halo carries: the column holding it, packed
+    as ``dtype`` over ``height`` x ``width`` x ``shape`` (``shape`` is
+    the trailing cell shape, e.g. ``(9,)`` for MFD proportions)."""
+
+    col: str
+    dtype: str
+    shape: tuple[int, ...] = ()
+
+    @property
+    def cell_bytes(self) -> int:
+        return np.dtype(self.dtype).itemsize * math.prod(self.shape)
+
+
+# Piece slots: position of the CONTRIBUTING tile relative to the receiving
+# tile, in the reference's D8 numbering (constants.hpp:5-10)
 #   2=NW 3=N 4=NE / 1=W 5=E / 8=SW 7=S 6=SE
+# so the tile at t sends its slot-s piece to t - (D8X[s], D8Y[s]).  Each
+# slot's (row band, column band) in the RECEIVER's padded frame; the
+# sender cuts the opposite band of its own tile ("all" for "mid").
+_SLOT_BANDS = {
+    3: ("lo", "mid"), 7: ("hi", "mid"), 1: ("mid", "lo"), 5: ("mid", "hi"),
+    2: ("lo", "lo"), 4: ("lo", "hi"), 8: ("hi", "lo"), 6: ("hi", "hi"),
+}
+_SENDER_BAND = {"lo": "hi", "mid": "all", "hi": "lo"}
 
-
-def assemble_padded(
-    core: np.ndarray,
-    strips: list[tuple[int, bytes]],
-    dtype: str,
-    fill_value: float,
-) -> tuple[np.ndarray, int, int]:
-    """Build the halo-padded array.  Returns (padded, pad_top, pad_left).
-
-    Sides with no contributing strip (global DEM edges) are NOT padded, so
-    the array border coincides with the global border and kernels'
-    edge rules apply exactly (see kernels/d8.py docstring).
-    """
-    h, w = core.shape
-    slot_map = dict()
-    for slot, blob in strips:
-        slot_map[slot] = blob
-    has_n = 3 in slot_map
-    has_s = 7 in slot_map
-    has_w = 1 in slot_map
-    has_e = 5 in slot_map
-    pt, pb = int(has_n), int(has_s)
-    pl, pr = int(has_w), int(has_e)
-    padded = np.full(
-        (h + pt + pb, w + pl + pr), fill_value, dtype=np.dtype(dtype)
-    )
-    padded[pt : pt + h, pl : pl + w] = core
-    dt = np.dtype(dtype)
-
-    def put(slot, ys, xs, sh):
-        if slot in slot_map:
-            padded[ys, xs] = np.frombuffer(slot_map[slot], dtype=dt).reshape(
-                sh
-            )
-
-    put(3, slice(0, 1), slice(pl, pl + w), (1, w))
-    put(7, slice(pt + h, pt + h + 1), slice(pl, pl + w), (1, w))
-    put(1, slice(pt, pt + h), slice(0, 1), (h, 1))
-    put(5, slice(pt, pt + h), slice(pl + w, pl + w + 1), (h, 1))
-    if pt and pl:
-        put(2, slice(0, 1), slice(0, 1), (1, 1))
-    if pt and pr:
-        put(4, slice(0, 1), slice(pl + w, pl + w + 1), (1, 1))
-    if pb and pr:
-        put(6, slice(pt + h, pt + h + 1), slice(pl + w, pl + w + 1), (1, 1))
-    if pb and pl:
-        put(8, slice(pt + h, pt + h + 1), slice(0, 1), (1, 1))
-    return padded, pt, pl
-
-
-def _jvm_halo_strips(df: DataFrame, meta: RasterMeta) -> DataFrame:
-    """Strip table (receiver tile, slot, strip) from the carried border
-    strips — pure JVM codegen: one scan of the small strip columns, one
-    explode; the tile blobs are never read and no Python stage runs.
-    Edges are the strips themselves; corners are single-element binary
-    substrings whose item size comes from the strip (its byte length
-    over ``width``), so it always matches the row's ``dtype``."""
-    isz = "(length(hs_n) div width)"
-    first = f"substring({{}}, 1, {isz})"
-    last = f"substring({{}}, (width - 1) * {isz} + 1, {isz})"
-    # (slot, dx, dy, piece): receiver = me + (dx, dy); slot = position of
-    # my piece relative to the receiver (reference D8 numbering)
-    entries = [
-        (3, 0, 1, "hs_s"),
-        (7, 0, -1, "hs_n"),
-        (1, 1, 0, "hs_e"),
-        (5, -1, 0, "hs_w"),
-        (2, 1, 1, last.format("hs_s")),
-        (4, -1, 1, first.format("hs_s")),
-        (8, 1, -1, last.format("hs_n")),
-        (6, -1, -1, first.format("hs_n")),
+_HALO_PIECE_SCHEMA = StructType(
+    [
+        StructField("tile_x", IntegerType(), False),
+        StructField("tile_y", IntegerType(), False),
+        StructField("slot", IntegerType(), False),
+        StructField("strip", BinaryType(), False),
     ]
+)
+
+
+def border_strips(*planes: np.ndarray) -> tuple[bytes, bytes, bytes, bytes]:
+    """The depth-1 pieces a tile carries as ``hs_n, hs_s, hs_w, hs_e``:
+    its N row, S row, W column and E column, each the planes' strips
+    concatenated in order."""
+    return tuple(
+        b"".join(pack(a[side]) for a in planes)
+        for side in (np.s_[0, :], np.s_[-1, :], np.s_[:, 0], np.s_[:, -1])
+    )
+
+
+def _jvm_halo_strips(df: DataFrame, meta: RasterMeta,
+                     planes: list[Plane]) -> DataFrame:
+    """Depth-1 pieces (receiver tile, slot, strip) from the carried
+    border strips -- pure JVM codegen: one scan of the small strip
+    columns, one explode; the planes are never read and no Python stage
+    runs.  Edges are the strips themselves; a corner is each plane's
+    first or last element of the N or S strip.  Byte sizes come from the
+    strip (its length over ``width`` is one cell of every plane), so a
+    single plane always matches the row's ``dtype``."""
+    total = sum(p.cell_bytes for p in planes)
+    cell = "(length(hs_n) div width)"
+
+    def part(nbytes: int) -> str:  # nbytes of one cell, from the strip
+        return cell if nbytes == total else f"({cell} * {nbytes} div {total})"
+
+    def corner(strip: str, cols: str) -> str:
+        subs, off = [], 0
+        for p in planes:
+            start = [f"width * {part(off)}"] if off else []
+            if cols == "hi":
+                start.append(f"(width - 1) * {part(p.cell_bytes)}")
+            subs.append(f"substring({strip}, {' + '.join(start + ['1'])}, "
+                        f"{part(p.cell_bytes)})")
+            off += p.cell_bytes
+        return subs[0] if len(subs) == 1 else f"concat({', '.join(subs)})"
+
+    strips = {("hi", "all"): "hs_s", ("lo", "all"): "hs_n",
+              ("all", "hi"): "hs_e", ("all", "lo"): "hs_w"}
+    pieces = []
+    for slot, bands in _SLOT_BANDS.items():
+        ys, xs = (_SENDER_BAND[b] for b in bands)
+        piece = strips.get((ys, xs)) or corner(strips[(ys, "all")], xs)
+        pieces.append(
+            f"named_struct('tile_x', tile_x + {-int(D8X[slot])}, "
+            f"'tile_y', tile_y + {-int(D8Y[slot])}, "
+            f"'slot', {slot}, 'strip', {piece})")
     # one SQL expression: each F.col/F.lit/F.struct/alias call costs
     # Py4J round trips (more with Spark's call-site capture); building
-    # this table piece by piece took over 1,100 per halo_join
-    pieces = ", ".join(
-        f"named_struct('tile_x', tile_x + {dx}, 'tile_y', tile_y + {dy}, "
-        f"'slot', {slot}, 'strip', {piece})"
-        for slot, dx, dy, piece in entries
-    )
-    return df.selectExpr(f"inline(array({pieces}))").where(
+    # this table piece by piece took over 1,100 per exchange
+    return df.selectExpr(f"inline(array({', '.join(pieces)}))").where(
         f"tile_x >= 0 AND tile_x < {meta.ntiles_x} "
         f"AND tile_y >= 0 AND tile_y < {meta.ntiles_y}"
     )
 
 
-def halo_join(tr: TiledRaster) -> DataFrame:
-    """Tile rows augmented with a ``halo`` array column of (slot, strip)
-    structs.  ONE shuffle of O(perimeter) strip data; the tile interiors
-    NEVER shuffle, by either of two mechanisms:
+def _cut_pieces(meta: RasterMeta, planes: list[Plane], k: int):
+    """mapInPandas body cutting depth-``k`` pieces in Python (tiles
+    carry only depth-1 strips).  A neighbour thinner than ``k`` is cut
+    whole, so ragged edges send thinner pieces."""
+    ntx, nty = meta.ntiles_x, meta.ntiles_y
+    band = {"lo": slice(0, k), "hi": slice(-k, None), "all": slice(None)}
 
-    * under ``HALO_BROADCAST_MAX_BYTES`` of packed strips, the strip
-      side is broadcast (Catalyst has no stats for the aggregated strips
-      and would otherwise pick a SortMergeJoin that exchanges every tile
-      blob — the dominant hidden cost of every focal op);
-    * above it — the 100 TB regime, where 10^6 tiles of packed strips
-      run to tens of GB — the join relies on CO-PARTITIONING: the strip
+    def cut(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = {f.name: [] for f in _HALO_PIECE_SCHEMA.fields}
+            for r in pdf.itertuples():
+                arrs = [
+                    np.frombuffer(getattr(r, p.col), p.dtype)
+                    .reshape(r.height, r.width, *p.shape) for p in planes
+                ]
+                for slot, bands in _SLOT_BANDS.items():
+                    tx = r.tile_x - int(D8X[slot])
+                    ty = r.tile_y - int(D8Y[slot])
+                    if not (0 <= tx < ntx and 0 <= ty < nty):
+                        continue
+                    ys, xs = (band[_SENDER_BAND[b]] for b in bands)
+                    out["tile_x"].append(tx)
+                    out["tile_y"].append(ty)
+                    out["slot"].append(slot)
+                    out["strip"].append(
+                        b"".join(pack(a[ys, xs]) for a in arrs))
+            yield pd.DataFrame(out)
+
+    return cut
+
+
+def halo_exchange(df: DataFrame, meta: RasterMeta, planes: list[Plane],
+                  k: int = 1) -> DataFrame:
+    """``df``'s tile rows augmented with a ``halo`` column: the list of
+    (slot, strip) structs of the depth-``k`` border pieces of
+    ``planes`` from every neighbouring tile (null without neighbours).
+    :func:`pad_planes` pastes it.
+
+    At ``k = 1`` the pieces come from the carried ``hs_*`` columns
+    (:func:`border_strips` of the planes) in the JVM; deeper pieces are
+    cut in Python from the plane columns and ``width``/``height``.
+
+    ONE shuffle of O(perimeter) piece data; the tile rows NEVER shuffle,
+    by either of two mechanisms:
+
+    * under ``HALO_BROADCAST_MAX_BYTES`` of pieces, the piece side is
+      broadcast (Catalyst has no stats for the aggregated pieces and
+      would otherwise pick a SortMergeJoin that exchanges every tile
+      blob -- the dominant hidden cost of every focal op);
+    * above it -- the 100 TB regime, where 10^6 tiles of pieces run to
+      tens of GB -- the join relies on CO-PARTITIONING: the piece
       groupBy lands on ``hash(tile_x, tile_y)`` at the canonical count,
       and every tile table in the engine carries the SAME partitioning
       (creation/ingest via :func:`copartition_tiles`, persistence via
       :func:`write_raster_table` bucketing; per-tile mapInPandas ops
       preserve it), so the sort-merge join plans ZERO exchange on the
-      tile-blob side.  tests/test_halo_plan.py asserts this.
+      tile side.  tests/test_halo_plan.py asserts this.
     """
-    meta = tr.meta
-    packed = _jvm_halo_strips(tr.df, meta).groupBy("tile_x", "tile_y").agg(
+    if k == 1:
+        pieces = _jvm_halo_strips(df, meta, planes)
+    else:
+        cols = ["tile_x", "tile_y", "width", "height",
+                *(p.col for p in planes)]
+        pieces = df.select(*cols).mapInPandas(
+            _cut_pieces(meta, planes, k), _HALO_PIECE_SCHEMA)
+    packed = pieces.groupBy("tile_x", "tile_y").agg(
         F.expr("collect_list(struct(slot, strip)) AS halo"))
-    # strips ~= 2 rings of perimeter cells at 8B + struct overhead
-    perim_bytes = (
-        meta.ntiles_x * meta.ntiles_y * 2 * (meta.tile_w + meta.tile_h)
-        * 8 * 4
+    # every tile receives at most 4 edges of depth k and 4 k x k corners
+    piece_bytes = (
+        meta.ntiles_x * meta.ntiles_y
+        * (2 * (meta.tile_w + meta.tile_h) * k + 4 * k * k)
+        * sum(p.cell_bytes for p in planes)
     )
-    if perim_bytes <= HALO_BROADCAST_MAX_BYTES:
+    if piece_bytes <= HALO_BROADCAST_MAX_BYTES:
         packed = F.broadcast(packed)
-    return tr.df.join(packed, ["tile_x", "tile_y"], "left")
+    return df.join(packed, ["tile_x", "tile_y"], "left")
+
+
+def halo_join(tr: TiledRaster) -> DataFrame:
+    """Tile rows with the 1-deep ``halo`` of their ``data``
+    (:func:`halo_exchange` of the one tile plane)."""
+    return halo_exchange(tr.df, tr.meta, [Plane("data", tr.meta.dtype)])
+
+
+def pad_planes(
+    cores: list[np.ndarray], halo, fills: list[float]
+) -> tuple[list[np.ndarray], int, int]:
+    """Paste a row's ``halo`` (None, or its (slot, strip) structs) around
+    each plane's ``core`` array.  Returns (padded arrays, pad_top,
+    pad_left).
+
+    A side is padded only where a neighbour sent a piece, as deep as
+    that piece (a neighbour thinner than the exchange depth sends a
+    thinner one), so on global DEM edges the array border coincides
+    with the global border and kernels' edge rules apply exactly (see
+    kernels/d8.py docstring).  Cells no piece covers keep ``fills``."""
+    h, w = cores[0].shape[:2]
+    sizes = [c.dtype.itemsize * math.prod(c.shape[2:]) for c in cores]
+    total = sum(sizes)
+    pieces = {} if halo is None else {s["slot"]: s["strip"] for s in halo}
+
+    def bad(slot: int, nbytes: int, cells: str) -> ValueError:
+        return ValueError(f"halo piece for slot {slot} holds {nbytes} "
+                          f"bytes, not {cells} cells of {total} bytes")
+
+    def depth(slot: int, side: int) -> int:
+        nbytes = len(pieces.get(slot, b""))
+        if nbytes % (side * total):
+            raise bad(slot, nbytes, f"whole lines of {side}")
+        return nbytes // (side * total)
+
+    pt, pb, pl, pr = depth(3, w), depth(7, w), depth(1, h), depth(5, h)
+    padded = []
+    for c, fill in zip(cores, fills):
+        p = np.full((h + pt + pb, w + pl + pr) + c.shape[2:], fill,
+                    dtype=c.dtype)
+        p[pt:pt + h, pl:pl + w] = c
+        padded.append(p)
+    rows = {"lo": slice(0, pt), "mid": slice(pt, pt + h),
+            "hi": slice(pt + h, pt + h + pb)}
+    cols = {"lo": slice(0, pl), "mid": slice(pl, pl + w),
+            "hi": slice(pl + w, pl + w + pr)}
+    for slot, blob in pieces.items():
+        rband, cband = _SLOT_BANDS[slot]
+        ys, xs = rows[rband], cols[cband]
+        n = (ys.stop - ys.start) * (xs.stop - xs.start)
+        if not n:
+            continue  # a corner beside an unpadded side
+        if len(blob) != n * total:
+            raise bad(slot, len(blob), str(n))
+        off = 0
+        for p, size in zip(padded, sizes):
+            p[ys, xs] = np.frombuffer(
+                blob, p.dtype, n * size // p.dtype.itemsize, off * n
+            ).reshape(p[ys, xs].shape)
+            off += size
+    return padded, pt, pl
+
+
+def assemble_padded(
+    core: np.ndarray, halo, dtype: str, fill_value: float
+) -> tuple[np.ndarray, int, int]:
+    """One-plane :func:`pad_planes`: ``core`` and the pieces read as
+    ``dtype``.  Returns (padded, pad_top, pad_left)."""
+    (padded,), pt, pl = pad_planes(
+        [np.asarray(core, dtype=dtype)], halo, [fill_value])
+    return padded, pt, pl
 
 
 PIECE_SCHEMA = StructType(

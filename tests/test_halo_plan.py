@@ -77,24 +77,44 @@ def test_halo_fallback_matches_broadcast_path(spark, monkeypatch):
 
 
 def test_halo_join_py4j_budget(spark, monkeypatch):
-    """halo_join builds its plan in a bounded number of Py4J commands.
-    Each Column-API call is a round trip, and Spark's call-site capture
-    adds more; a per-piece F.col/F.lit/F.struct build took over 1,100."""
+    """halo_join, and the two-plane exchange flats runs every BFS round,
+    build their plans in a bounded number of Py4J commands.  Each
+    Column-API call is a round trip, and Spark's call-site capture adds
+    more; a per-piece F.col/F.lit/F.struct build took over 1,100."""
     from py4j.clientserver import ClientServerConnection
+
+    from richdem_spark.ops.flats import _DIST_PLANES
 
     tr = T.raster_from_array(spark, np.arange(144.0).reshape(12, 12),
                              tile_w=4, tile_h=4)
-    sent = []
+    hi = np.arange(144, dtype=np.int64).reshape(12, 12)
+    lo = hi[::-1].copy()
+    dist = spark.createDataFrame(
+        [(tx, ty, 4, 4, T.pack(hi[win]), T.pack(lo[win]),
+          *T.border_strips(hi[win], lo[win]))
+         for ty in range(3) for tx in range(3)
+         for win in [np.s_[ty * 4:ty * 4 + 4, tx * 4:tx * 4 + 4]]],
+        ["tile_x", "tile_y", "width", "height", "dist_hi", "dist_lo",
+         *T.HALO_STRIP_COLS])
     send = ClientServerConnection.send_command
 
-    def counting(self, command, *args, **kwargs):
-        sent.append(command)
-        return send(self, command, *args, **kwargs)
+    def commands(build):
+        sent = []
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    T.halo_join(tr)
-    monkeypatch.undo()
-    assert 0 < len(sent) <= 100, len(sent)
+        def counting(self, command, *args, **kwargs):
+            sent.append(command)
+            return send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command",
+                            counting)
+        build()
+        monkeypatch.undo()
+        return len(sent)
+
+    n = commands(lambda: T.halo_join(tr))
+    assert 0 < n <= 100, n
+    n = commands(lambda: T.halo_exchange(dist, tr.meta, _DIST_PLANES))
+    assert 0 < n <= 100, n
 
 
 def test_bucketed_table_zero_exchange_tile_side(spark, monkeypatch):
