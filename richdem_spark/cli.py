@@ -393,7 +393,15 @@ def _dispatch(spark, args) -> int:
     elif args.cmd == "watershed":
         out = api.WatershedLabels(tr)
     elif args.cmd == "arcgis-convert":
-        out = api.ArcGISFlowdirs(tr)
+        from .constants import FLOWDIR_NO_DATA
+        from .kernels.d8 import arcgis_to_d8
+        from .ops.focal import elementwise
+
+        nd = tr.meta.nodata
+        out = elementwise(
+            tr, lambda a: arcgis_to_d8(a, nodata=nd), out_dtype="uint8",
+            out_nodata=None if nd is None else float(FLOWDIR_NO_DATA),
+            op_name="arcgis_to_d8")
     elif args.cmd == "taudem-convert":
         out = api.TaudemFlowdirs(tr)
     else:                                   # pragma: no cover

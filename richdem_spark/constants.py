@@ -65,14 +65,3 @@ GRID_ALL = GRID_LEFT | GRID_TOP | GRID_RIGHT | GRID_BOTTOM
 
 TOPO_D8 = "D8"
 TOPO_D4 = "D4"
-
-
-def topo_tables(topology: str):
-    """Return (dx, dy, nmax) offset tables for a topology name."""
-    if topology == TOPO_D8:
-        return D8X, D8Y, 8
-    if topology == TOPO_D4:
-        # D4 as a subset of the D8 numbering (W=1,N=3,E=5,S=7) so labels
-        # stay in one namespace; algorithms iterate these four slots.
-        return D8X, D8Y, (1, 3, 5, 7)
-    raise ValueError(f"unknown topology {topology!r}")

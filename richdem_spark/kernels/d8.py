@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..constants import D8X, D8Y, FLOWDIR_NO_DATA, NO_FLOW
+from ..constants import ARCGIS_TO_D8, D8X, D8Y, FLOWDIR_NO_DATA, NO_FLOW
 
 
 def _neighbor_flat(h: int, w: int, dirs: np.ndarray):
@@ -214,15 +214,17 @@ def exit_cell_of(dirs: np.ndarray) -> np.ndarray:
     return ptr
 
 
-def arcgis_to_d8(dirs: np.ndarray) -> np.ndarray:
+def arcgis_to_d8(dirs: np.ndarray,
+                 nodata: float | None = None) -> np.ndarray:
     """ArcGIS bit-coded directions -> RichDEM facets
-    (misc/conversion.hpp:11-35)."""
+    (misc/conversion.hpp:11-35); NoData cells become FLOWDIR_NO_DATA."""
     lut = np.zeros(256, dtype=np.uint8)
-    from ..constants import ARCGIS_TO_D8
-
     for k, v in ARCGIS_TO_D8.items():
         lut[k] = v
-    return lut[dirs.astype(np.int64)]
+    mask = np.ones(dirs.shape, bool) if nodata is None else (dirs != nodata)
+    out = lut[np.where(mask, dirs, 0).astype(np.int64)]
+    out[~mask] = FLOWDIR_NO_DATA
+    return out
 
 
 # TauDEM 0-8 -> RichDEM facets (apps/rd_taudem_d8_to_richdem_d8.cpp:

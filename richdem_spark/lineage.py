@@ -8,9 +8,7 @@
   are the engine's unit of partition-parallel work, so these are the
   per-partition metrics rows.
 * ``checkpoint`` / ``resume`` persist a TiledRaster (blobs + catalog
-  metadata incl. history) so any pipeline stage can restart from disk —
-  Structured Streaming state additionally checkpoints its offsets
-  (streaming.py).
+  metadata incl. history) so any pipeline stage can restart from disk.
 """
 
 from __future__ import annotations

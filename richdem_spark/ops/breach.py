@@ -179,11 +179,11 @@ def _pit_raise_wave(meta, eps_gradients: bool):
         for pdf in it:
             out = {f.name: [] for f in _STATE_SCHEMA.fields}
             for r in pdf.itertuples():
-                core = unpack(r.data, r.height, r.width, r.dtype).astype(
-                    np.float64)
+                core = unpack(r.data, r.height, r.width, r.dtype)
                 fillv = nodata if nodata is not None else 0.0
                 padded, pt, pl = assemble_padded(
-                    core, r.halo, "float64", fillv)
+                    core, r.halo, r.dtype, fillv)
+                padded = padded.astype(np.float64)
                 ph, pw = padded.shape
                 nd = (np.zeros(padded.shape, bool) if nodata is None
                       else padded == nodata)

@@ -138,12 +138,12 @@ def _wave_a(meta: RasterMeta, topology: str, custom_ocean: bool = False):
         for pdf in it:
             out = {f.name: [] for f in _A_SCHEMA.fields}
             for r in pdf.itertuples():
-                core = unpack(r.data, r.height, r.width, r.dtype).astype(
-                    np.float64
-                )
+                raw = unpack(r.data, r.height, r.width, r.dtype)
+                core = raw.astype(np.float64)
                 padded, pt, pl = assemble_padded(
-                    core, r.halo, "float64", np.nan
+                    raw, r.halo, r.dtype, np.nan
                 )
+                padded = padded.astype(np.float64)
                 h, w = r.height, r.width
                 # embed into a full 1-ring frame; off-DEM = +inf
                 full = np.full((h + 2, w + 2), np.inf)

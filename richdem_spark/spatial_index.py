@@ -86,24 +86,3 @@ def cell_neighbors(cid: int, level: int, ring: int = 1) -> list[int]:
                 )
                 out.append((level << 58) | m)
     return out
-
-
-def cell_bounds(cid: int, level: int):
-    """(lon_min, lat_min, lon_max, lat_max) of a cell."""
-    x, y = cell_to_xy(np.array([cid], np.uint64), level)
-    n = 1 << level
-    lon0 = -180.0 + 360.0 * int(x[0]) / n
-    lat1 = 90.0 - 180.0 * int(y[0]) / n
-    return lon0, lat1 - 180.0 / n, lon0 + 360.0 / n, lat1
-
-
-def bin_sql(lon_col: str, lat_col: str, level: int) -> tuple[str, str]:
-    """SQL expressions (ANSI, run identically by Spark and DuckDB) for the
-    x/y bin of a lon/lat pair — used where a full Morton id is overkill
-    (rasterization keys, oracle checks)."""
-    n = 1 << level
-    gx = (f"least(greatest(cast(floor(({lon_col} + 180.0) / 360.0 * {n}) "
-          f"as bigint), 0), {n - 1})")
-    gy = (f"least(greatest(cast(floor((90.0 - {lat_col}) / 180.0 * {n}) "
-          f"as bigint), 0), {n - 1})")
-    return gx, gy

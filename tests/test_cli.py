@@ -182,6 +182,23 @@ def test_cli_taudem_convert(spark, tmp_path):
         main(["taudem-convert", bad, str(tmp_path / "x.asc")])
 
 
+def test_cli_arcgis_convert(spark, tmp_path):
+    # ArcGIS bit codes -> RichDEM facets (misc/conversion.hpp:11-35)
+    src = str(tmp_path / "arc.asc")
+    _write_dirs(src, np.array([[0, 16, 32], [64, 128, 1]], dtype=float))
+    out = str(tmp_path / "rich.asc")
+    assert main(["arcgis-convert", src, out]) == 0
+    got, _ = read_ascii_grid(out)
+    np.testing.assert_array_equal(got, [[0, 1, 2], [3, 4, 5]])
+
+    nd = str(tmp_path / "arc_nd.asc")
+    _write_dirs(nd, np.array([[2.0, 4.0, 8.0, -9999.0]]), nodata=-9999)
+    assert main(["arcgis-convert", nd, out]) == 0
+    got, meta = read_ascii_grid(out)
+    np.testing.assert_array_equal(got, [[6, 7, 8, 255]])
+    assert meta["nodata_value"] == 255
+
+
 def test_cli_loop_check(spark, tmp_path, capsys):
     # all NO_FLOW: trivially acyclic
     flat = str(tmp_path / "flat.asc")

@@ -22,23 +22,27 @@ from richdem_spark.kernels.fill import (
 from richdem_spark.constants import GRID_ALL
 
 REF = "/root/reference/tests"
+FLOW_ACCUM = os.path.join(REF, "flow_accum")
 
 
-def _pairs(pattern):
+def _pairs(*patterns):
+    """(.d8, .out) golden pairs; with none found, one (directory, None)
+    param so the missing goldens fail the run instead of vanishing."""
     out = []
-    for d8f in sorted(glob.glob(os.path.join(REF, "flow_accum", pattern))):
-        outf = d8f[:-3] + ".out"
-        if os.path.exists(outf):
-            out.append((d8f, outf))
-    return out
+    for pattern in patterns:
+        for d8f in sorted(glob.glob(os.path.join(FLOW_ACCUM, pattern))):
+            outf = d8f[:-3] + ".out"
+            if os.path.exists(outf):
+                out.append((d8f, outf))
+    return out or [(FLOW_ACCUM, None)]
 
 
-@pytest.mark.parametrize(
-    "d8f,outf", _pairs("testdem*.d8") + _pairs("test_*.d8")
-)
+@pytest.mark.parametrize("d8f,outf", _pairs("testdem*.d8", "test_*.d8"))
 def test_d8_flow_accum_goldens(d8f, outf):
     """Every reference .d8 -> .out accumulation pair must match exactly
     (tests/tests.cpp:135-146)."""
+    if outf is None:
+        raise FileNotFoundError(f"no .d8/.out golden pairs in {d8f}")
     dirs, meta = read_ascii_grid(d8f, dtype=np.float64)
     nodata = meta["nodata_value"]
     d = dirs.astype(np.int64)

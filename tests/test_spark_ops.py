@@ -449,3 +449,31 @@ def test_driver_solve_bound_follows_jvm_heap(spark):
         .maxMemory()
     assert solve_mod.DRIVER_SOLVE_MAX_ROWS is None
     assert solve_mod.driver_solve_max(spark) == max(1_000_000, heap // 1500)
+
+
+def _breach(tr):
+    from richdem_spark.api import BreachDepressions
+
+    return [BreachDepressions(tr).to_array()]
+
+
+def _hierarchy(tr):
+    from richdem_spark.api import GetDepressionHierarchy
+
+    deps, labels, flowdirs = GetDepressionHierarchy(tr)
+    return [np.array([(d.parent, d.cell_count, d.pit_elev, d.out_elev)
+                      for d in deps]),
+            labels.to_array(), flowdirs.to_array()]
+
+
+@pytest.mark.parametrize("op", [_breach, _hierarchy])
+def test_multi_tile_float32_matches_float64(spark, op):
+    """Halo pieces are pasted in the tiles' own dtype: a float32 DEM
+    over several tiles gives what the same DEM cast to float64 gives."""
+    rng = np.random.default_rng(5)
+    dem = (rng.standard_normal((20, 20)).cumsum(0).cumsum(1) * 10
+           ).astype(np.float32)
+    got = op(raster_from_array(spark, dem, 8, 8))
+    want = op(raster_from_array(spark, dem.astype(np.float64), 8, 8))
+    for g, w in zip(got, want):
+        np.testing.assert_array_equal(g, w)
